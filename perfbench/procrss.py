@@ -3,7 +3,7 @@
 A Spark run is three kinds of process: the Python driver, the JVM it
 launches, and the Python workers the JVM forks. ``ru_maxrss`` of the
 driver sees only the first, so the sampler walks the tree under the
-driver every ``interval`` seconds and keeps the largest summed RSS.
+driver every ``INTERVAL_S`` seconds and keeps the largest summed RSS.
 Pages shared between forked workers are counted once per process, as
 ``ps`` would count them.
 """
@@ -14,6 +14,7 @@ import os
 import threading
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+INTERVAL_S = 0.2
 
 
 def _ppid_map() -> dict[int, int]:
@@ -90,11 +91,9 @@ def tree_rss_bytes(root: int) -> dict[str, int]:
 
 
 class TreeRssSampler:
-    """Background thread recording the peak RSS of a process tree."""
+    """Background thread recording the peak RSS of this process's tree."""
 
-    def __init__(self, root: int | None = None, interval: float = 0.2):
-        self.root = root or os.getpid()
-        self.interval = interval
+    def __init__(self):
         self.peak_bytes = 0
         # per command name (java, python3) at the moment of the peak
         self.peak_split: dict[str, int] = {}
@@ -103,10 +102,10 @@ class TreeRssSampler:
 
     def _run(self) -> None:
         while True:
-            split = tree_rss_bytes(self.root)
+            split = tree_rss_bytes(os.getpid())
             if sum(split.values()) > self.peak_bytes:
                 self.peak_bytes, self.peak_split = sum(split.values()), split
-            if self._stop.wait(self.interval):
+            if self._stop.wait(INTERVAL_S):
                 return
 
     def __enter__(self) -> TreeRssSampler:

@@ -1,6 +1,6 @@
 """Entity-resolution benchmark: one workload per process, closed loop.
 
-    python3 perfbench/run.py --workload batch_dense --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload batch_dense --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. Starts Spark on ``local[4]`` with 8
 shuffle partitions and a pinned driver heap, builds the workload's
@@ -177,7 +177,7 @@ def main() -> int:
             canary = mem_canary_mb_s()
             tracer = None
             if args.trace:
-                tracer = Tracer(spark)
+                tracer = Tracer(spark, workload.counted)
                 tracer.install()
             samples = []
             t_measure = time.perf_counter()
@@ -237,8 +237,7 @@ def _attempt(workload, tracer) -> dict:
         if tracer is None:
             return workload.op()
         sample = workload.op(region=lambda: tracer.span("pipeline"))
-        sample["pairs"], sample["edges"] = tracer.take_counts()
-        return sample
+        return sample | tracer.take_counts()
     except Exception:
         traceback.print_exc()
         return {

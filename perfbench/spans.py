@@ -76,13 +76,16 @@ LAYERS = (
 class Tracer:
     """Span recorder; spans live in memory until the run ends."""
 
-    def __init__(self, spark):
+    def __init__(self, spark, counted: dict[str, str]):
+        """``counted`` maps a layer function to "pairs" or "edges": the
+        rows it returns are counted after each operation. Only outputs
+        the operation neither commits nor reports need it; counting
+        re-runs their lazy plans."""
         self.sc = spark.sparkContext
         self.spans: list[dict] = []
         self._stack: list[int] = []
-        # DataFrames the layers returned, counted after each operation
-        self.pairs_out: list = []
-        self.edges_out: list = []
+        self.counted = counted
+        self._outputs: dict[str, list] = {}
         self._saved: list[tuple[object, str, object]] = []
 
     @contextmanager
@@ -118,10 +121,9 @@ class Tracer:
         def traced(*args, **kwargs):
             with self.span(layer):
                 out = fn(*args, **kwargs)
-            if fn.__name__ in ("candidate_pairs", "incremental_candidate_pairs"):
-                self.pairs_out.append(out[0] if isinstance(out, tuple) else out)
-            elif fn.__name__ == "edges_above_threshold":
-                self.edges_out.append(out)
+            if fn.__name__ in self.counted:
+                df = out[0] if isinstance(out, tuple) else out
+                self._outputs.setdefault(self.counted[fn.__name__], []).append(df)
             return out
 
         return traced
@@ -160,13 +162,11 @@ class Tracer:
             obj, attr, orig = self._saved.pop()
             setattr(obj, attr, orig)
 
-    def take_counts(self) -> tuple[int, int]:
-        """Rows of the pairs and edges the last operation produced.
+    def take_counts(self) -> dict[str, int]:
+        """Rows of the ``counted`` outputs of the last operation.
 
         Counted after the operation's span has closed, so the extra
         jobs are charged to no layer and to no operation."""
-        n_pairs = sum(df.count() for df in self.pairs_out)
-        n_edges = sum(df.count() for df in self.edges_out)
-        self.pairs_out.clear()
-        self.edges_out.clear()
-        return n_pairs, n_edges
+        out = {k: sum(df.count() for df in dfs) for k, dfs in self._outputs.items()}
+        self._outputs.clear()
+        return out

@@ -21,10 +21,10 @@ import pandas as pd
 # Sizes. A run is a whole process (JVM start, setup, measurement) and
 # most of it is fixed cost, so the operations are small; README.md
 # ("Time budget and sizes") has the arithmetic.
-DENSE_ENTITIES = 500
+DENSE_ENTITIES = 2000
 FLAGSHIP_DOCS = 600
-INC_BASE_ENTITIES = 200
-INC_DELTA_DOCS = 100
+INC_BASE_ENTITIES = 1000
+INC_DELTA_DOCS = 700
 
 F1_FLOOR = 0.99
 
@@ -67,6 +67,8 @@ class BatchDense:
     sketch is off, so this is the bypass side for cascade work."""
 
     name = "batch_dense"
+    # Pipeline.run reports its committed pairs and edges
+    counted: dict[str, str] = {}
 
     def __init__(self, spark, work: str, seed: int):
         from chameleon_entity_linking_spark.plans.pipeline import Pipeline
@@ -115,6 +117,8 @@ class BatchDense:
             "resolve_s": dt,
             "docs": self.n_docs,
             "f1": f1,
+            "pairs": res["n_pairs"],
+            "edges": res["n_edges"],
             "stage_s": res["timings"],
             "checks": checks,
         }
@@ -147,6 +151,8 @@ class BatchFlagship:
     the time: the mechanism side for cascade work."""
 
     name = "batch_flagship"
+    # the registry query commits nothing and returns only clusters
+    counted = {"candidate_pairs": "pairs", "edges_above_threshold": "edges"}
 
     def __init__(self, spark, work: str, seed: int):
         import __spark_entry__
@@ -212,6 +218,8 @@ class IncrementalRefresh:
     latency; block and score see only the delta."""
 
     name = "incremental_refresh"
+    # the delta's candidate pairs are never committed
+    counted = {"incremental_candidate_pairs": "pairs"}
 
     def __init__(self, spark, work: str, seed: int):
         from chameleon_entity_linking_spark.plans.pipeline import Pipeline
@@ -263,7 +271,7 @@ class IncrementalRefresh:
         )
         with region():
             t0 = time.perf_counter()
-            self.pipe.incremental(new_docs, batch_id=f"delta-{self.n_ops}")
+            res = self.pipe.incremental(new_docs, batch_id=f"delta-{self.n_ops}")
             dt = time.perf_counter() - t0
         self.n_ops += 1
         pred = _clusters(self.pipe.catalog, self.spark)
@@ -274,7 +282,13 @@ class IncrementalRefresh:
                 batch["doc_id"].isin(pred.dropna().index).all()
             ),
         }
-        return {"resolve_s": dt, "docs": len(batch), "f1": f1, "checks": checks}
+        return {
+            "resolve_s": dt,
+            "docs": len(batch),
+            "f1": f1,
+            "edges": res["n_new_edges"],
+            "checks": checks,
+        }
 
 
 WORKLOADS = {w.name: w for w in (BatchDense, BatchFlagship, IncrementalRefresh)}
