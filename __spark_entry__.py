@@ -64,10 +64,8 @@ def _er_pipeline_from_docs(
     pairs, _ = candidate_pairs(
         doc_norm, block_cfg, score_cfg=score_cfg, persisted_out=persisted
     )
-    presketched = score_cfg.sketch_fused
     edges = edges_above_threshold(
-        score_pairs(pairs, doc_norm, score_cfg, presketched=presketched),
-        score_cfg,
+        score_pairs(pairs, doc_norm, score_cfg), score_cfg
     )
     assignments = assign_clusters(docs, connected_components(edges))
     sizes = assignments.groupBy("cluster_id").agg(
@@ -137,10 +135,6 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.905,
             prefilter_min_cheap=0.9,
             prefilter_max_hamming=16,
-            # raw pairs >> key rows on the driver corpora (45x at
-            # sf1.0) -> the inline-sketch expansion wins (see
-            # ScoreConfig.sketch_inline)
-            sketch_inline=True,
         ),
     )
 
@@ -694,7 +688,6 @@ def _flagship_x10_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 threshold=0.905,
                 prefilter_min_cheap=0.9,
                 prefilter_max_hamming=16,
-                sketch_inline=True,
             ),
         )
         .groupBy("cluster_size")

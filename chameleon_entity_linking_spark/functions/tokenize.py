@@ -34,14 +34,6 @@ def tokens_col(text: Column) -> Column:
     )
 
 
-def tokens_sql(expr: str) -> str:
-    """The DuckDB-equivalent SQL for :func:`tokens_col` (oracle use)."""
-    return (
-        f"list_filter(regexp_split_to_array(lower({expr}), '[^a-z0-9]+'),"
-        f" t -> t <> '')"
-    )
-
-
 def bpe_ish_tokens(text: str) -> list[str]:
     """Sub-word-ish token split for token-count analytics (Python side)."""
     return BPE_ISH_RE.findall(text or "")

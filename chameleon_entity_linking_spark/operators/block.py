@@ -393,14 +393,13 @@ def candidate_pairs(
     Returns (pairs(doc_a, doc_b), key_metrics(key, fam, n_docs, class)).
 
     With ``score_cfg`` (a ScoreConfig with cascade + prefilter), the
-    scoring stage's int8-sketch prefilter runs on the RAW pair stream
-    — map-side, in the same stage as the expansion (the sketch table
-    broadcasts; at sizes past broadcast it is one shuffle of the raw
-    stream, still cheaper than dedup-then-join) — BEFORE the pair
-    dedup shuffle. Measured at 193k docs: ~89% of raw candidates die
-    at the sketch, so the dedup shuffle and the pairs snapshot shrink
-    ~9x, and the scoring stage re-applies the same (bit-exact) cut to
-    nothing. Final edges are identical with or without fusion.
+    scoring stage's sketch prefilter runs on the RAW pair stream —
+    the sign sketch rides the key table into the expansion, so the
+    hamming cut runs in the expansion stage — BEFORE the pair dedup
+    shuffle. Measured at 193k docs: ~89% of raw candidates die at the
+    sketch, so the dedup shuffle and the pairs snapshot shrink ~9x.
+    The pairs then carry ``s_cos`` and scoring skips the prefilter.
+    Final edges are identical with or without fusion.
 
     Intermediates are ``persist()``-ed (multiple passes consume them).
     Pass ``persisted_out`` (a list) to receive the cached DataFrames
@@ -422,46 +421,25 @@ def candidate_pairs(
         keys = blocking_keys(doc_norm, cfg).persist()
         if persisted_out is not None:
             persisted_out.append(keys)
-    # inline phase-0 sketch (r6, guide §8 "shuffle keys and metadata
-    # instead of payloads", inverted): when the scoring prefilter's
-    # sign-sketch phase applies, the 9-byte (sig, mediaonly) sketch
-    # rides the SMALL key table into the grouped member lists, so the
-    # expansion emits pairs already carrying both sides' sketches and
-    # the hamming cut fuses into the explode stage itself — no
-    # broadcast-join probes and no row re-materialization over the
-    # tens-of-millions raw pair stream (measured at sf1.0: 67M raw
-    # pairs from 1.5M key rows; widening the key rows by 9B is noise,
-    # removing two joins over the raw stream is not).
+    # phase-0 sketch on the key table (r6, guide §8 "shuffle keys and
+    # metadata instead of payloads", inverted): the 9-byte (sig,
+    # mediaonly) sketch rides the SMALL key table into the grouped
+    # member lists, so the expansion emits pairs already carrying both
+    # sides' sketches and the hamming cut fuses into the explode stage
+    # itself — no joins over the tens-of-millions raw pair stream
+    # (measured at sf1.0: 67M raw pairs from 1.5M key rows).
     sketch = None
-    if (
-        score_cfg is not None
-        and score_cfg.sketch_fused
-        and getattr(score_cfg, "sketch_inline", False)
-        and score_cfg.prefilter_max_hamming is not None
-        and "emb_sig" in doc_norm.columns
-    ):
-        from chameleon_entity_linking_spark.operators.score import (
-            _mediaonly,
-        )
-
-        sketch = doc_norm.select(
-            "doc_id",
-            F.col("emb_sig").alias("sig"),
-            _mediaonly().alias("mo"),
-        )
-        if score_cfg.broadcast_sketch:
-            sketch = F.broadcast(sketch)
-    raw, key_metrics = expand_key_pairs(
-        keys, cfg, persisted_out, sketch=sketch
-    )
-    # ScoreConfig.sketch_fused is THE shared flag: callers passing
-    # presketched= to score_pairs read the same property, so the two
-    # sides can never drift on whether sketch columns exist
     if score_cfg is not None and score_cfg.sketch_fused:
         from chameleon_entity_linking_spark.operators.score import (
+            sign_sketch,
             sketch_prefilter,
         )
 
+        sketch = sign_sketch(doc_norm, score_cfg)
+    raw, key_metrics = expand_key_pairs(
+        keys, cfg, persisted_out, sketch=sketch
+    )
+    if sketch is not None:
         raw = sketch_prefilter(raw, doc_norm, score_cfg)
     pairs = raw.dropDuplicates(["doc_a", "doc_b"])
     return pairs, key_metrics
@@ -485,14 +463,12 @@ def expand_key_pairs(
     count ceilings when ``cfg.family_ceilings`` is set; a bare
     (doc_id, key) table gets the global ceiling.
 
-    ``sketch`` (optional): a (doc_id, sig:long, mo:boolean) per-doc
-    sign-sketch table (broadcast-hinted by the caller when small).
-    When given, members group as structs carrying the sketch and the
-    output pairs additionally carry (sig_a, sig_b, mediaonly_a,
-    mediaonly_b) — score.sketch_prefilter then applies its phase-0
-    hamming cut inline in the expansion stage instead of re-joining
-    the sketch against the raw pair stream. Pair SET is identical
-    either way.
+    ``sketch`` (optional): the (doc_id, sig:long, mo:boolean) per-doc
+    table of score.sign_sketch. When given, members group as structs
+    carrying the sketch and the output pairs additionally carry
+    (sig_a, sig_b, mediaonly_a, mediaonly_b), so
+    score.sketch_prefilter's phase-0 hamming cut runs inline in the
+    expansion stage. Pair SET is identical either way.
     """
     spark = keys.sparkSession
     cap = cfg.hot_key_cap

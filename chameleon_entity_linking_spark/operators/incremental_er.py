@@ -55,6 +55,7 @@ from chameleon_entity_linking_spark.operators.score import (
     ScoreConfig,
     edges_above_threshold,
     score_pairs,
+    sign_sketch,
     sketch_prefilter,
 )
 
@@ -78,8 +79,9 @@ def incremental_candidate_pairs(
     (new-new and new-committed; committed-committed pairs are the
     committed run's business).
 
-    With ``score_cfg`` + ``doc_norm_all``, the int8-sketch prefilter
-    fuses into the expansion exactly like the batch path.
+    With ``score_cfg`` + ``doc_norm_all``, the sign sketch rides the
+    key table and the sketch prefilter fuses into the expansion
+    exactly like the batch path.
 
     ``broadcast_delta`` (default True) hints the new-doc-id membership
     probes as broadcasts — correct while the delta batch is small
@@ -103,7 +105,14 @@ def incremental_candidate_pairs(
     touched = new_keys.select("key").distinct()
     relevant = committed_keys.join(touched, "key", "left_semi")
     keys = relevant.unionByName(new_keys.select(*relevant.columns))
-    raw, _metrics = expand_key_pairs(keys, cfg, persisted_out)
+    sketch = None
+    if (
+        score_cfg is not None
+        and doc_norm_all is not None
+        and score_cfg.sketch_fused
+    ):
+        sketch = sign_sketch(doc_norm_all, score_cfg)
+    raw, _metrics = expand_key_pairs(keys, cfg, persisted_out, sketch=sketch)
     # keep only pairs with >= 1 new endpoint. The new-doc id set is
     # the batch — small relative to the corpus — so both membership
     # probes broadcast (when hinted).
@@ -118,13 +127,9 @@ def incremental_candidate_pairs(
         raw.join(na, "doc_a", "left")
         .join(nb, "doc_b", "left")
         .where(F.coalesce("new_a", F.lit(False)) | F.coalesce("new_b", F.lit(False)))
-        .select("doc_a", "doc_b")
+        .drop("new_a", "new_b")
     )
-    if (
-        score_cfg is not None
-        and doc_norm_all is not None
-        and score_cfg.sketch_fused
-    ):
+    if sketch is not None:
         raw = sketch_prefilter(raw, doc_norm_all, score_cfg)
     return raw.dropDuplicates(["doc_a", "doc_b"])
 
@@ -242,10 +247,8 @@ def incremental_er_update(
         broadcast_delta=broadcast_delta,
         new_keys=new_keys,
     )
-    presketched = score_cfg.sketch_fused
     new_edges = edges_above_threshold(
-        score_pairs(pairs, doc_norm_all, score_cfg, presketched=presketched),
-        score_cfg,
+        score_pairs(pairs, doc_norm_all, score_cfg), score_cfg
     )
     all_docs = committed_assignments.select("doc_id").unionByName(
         new_docs.select("doc_id")

@@ -12,13 +12,15 @@ is exact media_ref Jaccard (the entity-title analogue).
 fan-out emits ~100 candidates/doc, ~98% junk. Scoring is therefore a
 three-phase cascade, each phase shuffling less data than it rules out:
 
-1. **Sketch prefilter (compact shuffle).** The pairs table joins only
-   the int8-quantized embedding sketch ``emb_q`` (64B) + media_refs
-   per side — NOT the full feature row. Estimated cosine (int8 dot,
-   error <= ~0.02 for unit vectors) below
-   ``prefilter_min_cheap - margin``, with no media on either side,
-   cannot survive the later phases -> dropped. Measured effect: the
-   wide-feature shuffle shrinks from ~30GB to ~2GB at 18M pairs.
+1. **Sketch prefilter (compact shuffle).** A 64-bit sign sketch +
+   media-only flag per doc rides the key table into pair generation,
+   so a hamming cut drops most raw pairs inside the expansion stage;
+   only the survivors join the int8-quantized embedding ``emb_q``
+   (64B) per side — NOT the full feature row. Estimated cosine (int8
+   dot, error <= ~0.02 for unit vectors) below
+   ``prefilter_min_cheap``, with no media-only side, cannot survive
+   the later phases -> dropped. Measured effect: the wide-feature
+   shuffle shrinks from ~30GB to ~2GB at 18M pairs.
 2. **Exact cheap components (JVM, survivors only).** Full features
    join the (small) survivor set; token/media Jaccard + exact float
    dot (cosine: encoder vectors are unit-norm or zero) re-check the
@@ -98,25 +100,15 @@ class ScoreConfig:
         # the batched 2-D kernels' work scales with batch max length.
         # No shuffle (sortWithinPartitions); order-insensitive output.
         length_sort: bool = True,
-        # broadcast the (doc_id, emb_q, media-only) sketch table into
-        # the prefilter joins: 70B/doc, so it broadcasts comfortably
-        # to ~10^8 docs. Planner size estimates come from the FULL
-        # doc_norm parquet (wide embedding/spans columns), so without
-        # the hint the 20x-larger raw pair stream gets shuffled
-        # instead (measured: +30s at 193k docs). Set False past
-        # broadcast scale — the prefilter then shuffle-joins, which is
-        # still one shuffle of the raw stream vs two of the deduped.
+        # broadcast the per-doc sketch tables (the (doc_id, sig,
+        # media-only) sign sketch that rides the key table, and the
+        # (doc_id, emb_q) table the hamming survivors join): ~70B/doc,
+        # so they broadcast comfortably to ~10^8 docs. Planner size
+        # estimates come from the FULL doc_norm parquet (wide
+        # embedding/spans columns), so without the hint the much larger
+        # side gets shuffled instead (measured: +30s at 193k docs). Set
+        # False past broadcast scale — the joins then shuffle.
         broadcast_sketch: bool = True,
-        # fuse the phase-0 sign sketch INTO the pair expansion
-        # (block.expand_key_pairs sketch=): members group as
-        # (doc_id, sig, mediaonly) structs, so the hamming cut runs
-        # inline in the explode stage with no joins over the raw pair
-        # stream. WINS when raw pairs >> key rows (measured 45x at the
-        # sf1.0 flagship corpus); the ~17B/row widening of the
-        # key->grouped shuffle can cost more than the removed probes
-        # when the ratio is near 1 (the dense-key bench corpus), so
-        # the default stays off and the flagship config opts in.
-        sketch_inline: bool = False,
     ):
         self.w_jw = w_jw
         self.w_lev = w_lev
@@ -131,17 +123,12 @@ class ScoreConfig:
         self.prefilter_max_hamming = prefilter_max_hamming
         self.length_sort = length_sort
         self.broadcast_sketch = broadcast_sketch
-        self.sketch_inline = sketch_inline
 
     @property
     def sketch_fused(self) -> bool:
-        """True iff pair generation fuses the sketch prefilter (and
-        therefore emits pre-sketched pairs carrying ``s_cos``). THE
-        single definition — block.candidate_pairs decides whether to
-        attach sketches with this, and every caller passing
-        ``presketched=`` to score_pairs must read the same flag, or a
-        drift leaves one side expecting columns the other didn't
-        build."""
+        """True iff pair generation fuses the sketch prefilter: the
+        sign sketch rides the key table and the emitted pairs carry
+        ``s_cos``, which is how score_pairs knows the prefilter ran."""
         return self.cascade and self.prefilter_min_cheap is not None
 
     def fingerprint(self) -> dict:
@@ -232,30 +219,20 @@ def _eval_once(expr):
     return F.get(F.shuffle(F.array(expr)), 0)
 
 
-def _dot_q(a, b):
-    """JVM-side int8 dot -> cosine estimate in [-1, 1] for unit-norm
-    (or zero) source vectors. (Interpreted HOF fold — correct at any
-    dim, but ~12us/pair; the pair-stream hot path uses
-    :func:`_int8_dot_udf` instead, measured 3-6x faster per pair
-    including the Arrow transfer. An unrolled 64-term GetArrayItem
-    codegen expression was ALSO measured — slower than this fold —
-    so the vectorized-numpy route is the fast path, guide §4.2.)"""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("int") * y.cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(127.0 * 127.0)
-
-
 def _int8_dot_udf():
     """Arrow-batched int8 dot (guide §4.2): whole batches of emb_q
     sketch pairs hand to one ``np.einsum`` per batch — exact integer
-    arithmetic (int32 accumulators, max |sum| = 64 * 127^2), then the
-    same /127^2 division as :func:`_dot_q`, so the cosine estimate is
-    BIT-IDENTICAL to the JVM fold (sum-equality asserted in
-    tests/test_score.py). Marked non-deterministic so the optimizer
-    never duplicates the Python stage below a filter consuming its
-    output (guide §4.4) — the value is deterministic.
+    arithmetic (int32 accumulators, max |sum| = 64 * 127^2), then a
+    /127^2 division, so the cosine estimate is BIT-IDENTICAL to an
+    interpreted JVM ``zip_with``/``aggregate`` fold (the parity
+    reference in tests/test_score.py). Marked non-deterministic so the
+    optimizer never duplicates the Python stage below a filter
+    consuming its output (guide §4.4) — the value is deterministic.
+
+    Precondition: both inputs are non-null ``emb_q`` arrays of one
+    fixed dimension across the whole column, which normalize() always
+    emits. Nothing checks it here: a null or ragged array makes
+    ``np.stack`` raise and aborts the task.
     """
     import numpy as np
 
@@ -279,20 +256,31 @@ def _mediaonly():
     return (F.size("media_refs") > 0) & (F.size("tokens") == 0)
 
 
-def _sketch(
-    doc_norm: DataFrame, side: str, sig: bool = False
-) -> DataFrame:
-    cols = [
-        F.col("doc_id").alias(f"doc_{side}"),
-        _mediaonly().alias(f"mediaonly_{side}"),
-    ]
-    cols.insert(
-        1,
-        F.col("emb_sig").alias(f"sig_{side}")
-        if sig
-        else F.col("emb_q").alias(f"q_{side}"),
+def _hamming_cut(doc_norm: DataFrame, cfg: ScoreConfig) -> int | None:
+    """The phase-0 hamming cut, or None when it does not apply (no
+    cut configured, or no ``emb_sig``: normalize() omits it past 64
+    dims)."""
+    if cfg.prefilter_max_hamming is None or "emb_sig" not in doc_norm.columns:
+        return None
+    return int(cfg.prefilter_max_hamming)
+
+
+def sign_sketch(doc_norm: DataFrame, cfg: ScoreConfig) -> DataFrame:
+    """(doc_id, sig, mo): the per-doc phase-0 sketch — the 64-bit
+    embedding sign sketch (null when the hamming cut does not apply)
+    and the media-only flag, broadcast-hinted per
+    ``cfg.broadcast_sketch``. Pair generation joins it onto the key
+    table (block.expand_key_pairs ``sketch=``), so the raw pair stream
+    is born carrying both sides' sketches."""
+    sig = (
+        F.col("emb_sig")
+        if _hamming_cut(doc_norm, cfg) is not None
+        else F.lit(None).cast("long")
     )
-    return doc_norm.select(*cols)
+    sketch = doc_norm.select(
+        "doc_id", sig.alias("sig"), _mediaonly().alias("mo")
+    )
+    return F.broadcast(sketch) if cfg.broadcast_sketch else sketch
 
 
 def sketch_prefilter(
@@ -307,68 +295,53 @@ def sketch_prefilter(
     raw pair stream dies, at a fraction of the per-pair memory
     traffic of the array dot (the C=8 DRAM-saturation fix: the
     expansion+prefilter stage's bytes touched per raw pair fall from
-    ~2x64B arrays + interpreted HOF allocations to two longs).
+    ~2x64B arrays to two longs). Pairs from the fused expansion already
+    carry (sig_a, sig_b, mediaonly_a, mediaonly_b), so the cut is a
+    plain filter inside the expansion stage; pairs without them (a
+    hand-built pair list) get them from one :func:`sign_sketch` join
+    per side first.
 
     Phase 1 (int8 dot, survivors only): the exact int8-dot cosine.
     Scoring re-applies this same cut bit-exactly downstream.
 
     Output carries ``s_cos`` (the int8-dot cosine): the dot is the
-    most expensive cheap-phase expression (~16us/pair interpreted
-    HOF), so downstream scoring reuses this column instead of
-    recomputing it per pair.
+    most expensive cheap-phase expression, so downstream scoring
+    reuses this column instead of recomputing it per pair.
     """
     if cfg.prefilter_min_cheap is None or not cfg.cascade:
         return pairs
-    inline_sig = cfg.prefilter_max_hamming is not None and {
-        "sig_a",
-        "sig_b",
-        "mediaonly_a",
-        "mediaonly_b",
-    } <= set(pairs.columns)
-    use_ham = (
-        cfg.prefilter_max_hamming is not None
-        and "emb_sig" in doc_norm.columns
-    )
-    if inline_sig or use_ham:
-        ham_cut = F.lit(int(cfg.prefilter_max_hamming))
-        if inline_sig:
-            # the expansion attached both sides' sketches inline
-            # (block.expand_key_pairs sketch=): phase 0 is a plain
-            # filter fused into the expansion stage — no joins over
-            # the raw pair stream at all (r6)
-            ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-            pre = pairs.where(
-                F.col("mediaonly_a") | F.col("mediaonly_b") | (ham <= ham_cut)
-            ).select("doc_a", "doc_b", "mediaonly_a", "mediaonly_b")
-        else:
-            ga = F.broadcast if cfg.broadcast_sketch else (lambda df: df)
-            siga = ga(_sketch(doc_norm, "a", sig=True))
-            sigb = ga(_sketch(doc_norm, "b", sig=True))
-            ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-            pre = (
-                pairs.join(siga, "doc_a")
-                .join(sigb, "doc_b")
-                .where(
-                    F.col("mediaonly_a")
-                    | F.col("mediaonly_b")
-                    | (ham <= ham_cut)
-                )
-                .select("doc_a", "doc_b", "mediaonly_a", "mediaonly_b")
+    if "mediaonly_a" not in pairs.columns:
+        sketch = sign_sketch(doc_norm, cfg)
+        for side in "ab":
+            pairs = pairs.join(
+                sketch.select(
+                    F.col("doc_id").alias(f"doc_{side}"),
+                    F.col("sig").alias(f"sig_{side}"),
+                    F.col("mo").alias(f"mediaonly_{side}"),
+                ),
+                f"doc_{side}",
             )
-        qa = doc_norm.select(
-            F.col("doc_id").alias("doc_a"), F.col("emb_q").alias("q_a")
-        )
-        qb = doc_norm.select(
-            F.col("doc_id").alias("doc_b"), F.col("emb_q").alias("q_b")
-        )
-        if cfg.broadcast_sketch:
-            qa, qb = F.broadcast(qa), F.broadcast(qb)
-        joined = pre.join(qa, "doc_a").join(qb, "doc_b")
-    else:
-        sa, sb = _sketch(doc_norm, "a"), _sketch(doc_norm, "b")
-        if cfg.broadcast_sketch:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        joined = pairs.join(sa, "doc_a").join(sb, "doc_b")
+    # media *presence* is no pass — ~all docs can carry media; only a
+    # text-free media doc is exempt from the lexical cuts (its match
+    # signal is media overlap alone)
+    mediaonly = F.col("mediaonly_a") | F.col("mediaonly_b")
+    cut = _hamming_cut(doc_norm, cfg)
+    if cut is not None:
+        ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+        pairs = pairs.where(mediaonly | (ham <= F.lit(cut)))
+    qa = doc_norm.select(
+        F.col("doc_id").alias("doc_a"), F.col("emb_q").alias("q_a")
+    )
+    qb = doc_norm.select(
+        F.col("doc_id").alias("doc_b"), F.col("emb_q").alias("q_b")
+    )
+    if cfg.broadcast_sketch:
+        qa, qb = F.broadcast(qa), F.broadcast(qb)
+    joined = (
+        pairs.select("doc_a", "doc_b", "mediaonly_a", "mediaonly_b")
+        .join(qa, "doc_a")
+        .join(qb, "doc_b")
+    )
     # vectorized Arrow dot (r6): one numpy einsum per batch instead of
     # an interpreted per-pair fold — measured 3-6x faster per pair on
     # the dominant prefilter stage; nondeterministic marking plays the
@@ -380,20 +353,12 @@ def sketch_prefilter(
         "mediaonly_b",
         _int8_dot_udf()(F.col("q_a"), F.col("q_b")).alias("s_cos"),
     )
-    # media *presence* is no pass — ~all docs can carry media; only a
-    # text-free media doc is exempt from the lexical cut (its match
-    # signal is media overlap alone)
-    keep = (
-        F.col("mediaonly_a")
-        | F.col("mediaonly_b")
-        | (F.col("s_cos") >= F.lit(cfg.prefilter_min_cheap))
-    )
+    keep = mediaonly | (F.col("s_cos") >= F.lit(cfg.prefilter_min_cheap))
     return proj.where(keep).select("doc_a", "doc_b", "s_cos")
 
 
 def score_pairs(
-    pairs: DataFrame, doc_norm: DataFrame, cfg: ScoreConfig,
-    presketched: bool = False,
+    pairs: DataFrame, doc_norm: DataFrame, cfg: ScoreConfig
 ) -> DataFrame:
     """pairs(doc_a, doc_b) + doc_norm -> scored pairs with components.
 
@@ -401,9 +366,12 @@ def score_pairs(
     With ``cfg.cascade`` (default) only pairs whose upper-bound score
     can reach ``cfg.threshold`` are emitted — callers filtering at
     ``threshold`` (``edges_above_threshold``) see identical results.
+    Pairs that already carry ``s_cos`` (the fused pair generation,
+    ``cfg.sketch_fused``) have been through :func:`sketch_prefilter`;
+    any other pair list goes through it here.
     """
     jw_udf, lev_ratio_udf = _make_udfs()
-    if not presketched:  # set by callers that ran sketch_prefilter themselves
+    if "s_cos" not in pairs.columns:
         pairs = sketch_prefilter(pairs, doc_norm, cfg)
     # the prefilter already computed the int8-dot cosine — reuse it
     # instead of re-running the dot per pair (and drop the emb_q

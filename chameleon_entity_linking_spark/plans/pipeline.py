@@ -216,9 +216,7 @@ class Pipeline:
             "score",
             "scores",
             score_fp,
-            lambda: score_pairs(
-                pairs, doc_norm, self.score_cfg, presketched=True
-            ),
+            lambda: score_pairs(pairs, doc_norm, self.score_cfg),
         )
         edges = self._run_stage(
             "edges",

@@ -470,7 +470,3 @@ class IcebergCatalog:
 
     def read(self, spark, table):
         return spark.read.table(self._fqn(table))
-
-
-def open_catalog(warehouse: str) -> ParquetCatalog:
-    return ParquetCatalog(warehouse)

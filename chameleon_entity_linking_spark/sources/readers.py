@@ -60,7 +60,8 @@ def with_synthetic_duplicates(interleaved: DataFrame, every: int = 4) -> DataFra
     # whole-column guard (ADVICE r5): the previous first-row probe
     # passed a corpus whose FIRST id is numeric while silently
     # excluding later non-numeric ids from duplicate selection. One
-    # metadata-cheap aggregate validates every row.
+    # aggregate validates every row: it is a full scan of doc_id (one
+    # extra job), not a metadata-only read.
     bad = interleaved.agg(
         F.sum(
             (

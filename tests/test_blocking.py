@@ -10,6 +10,16 @@ from chameleon_entity_linking_spark.operators.block import (
     candidate_pairs,
 )
 from chameleon_entity_linking_spark.operators.normalize import normalize
+from chameleon_entity_linking_spark.operators.score import (
+    ScoreConfig,
+    sketch_prefilter,
+)
+
+
+_DOCS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
 
 
 def _docs(spark, rows):
@@ -25,10 +35,48 @@ def _docs(spark, rows):
         )
         for doc_id, text, media in rows
     ]
-    return spark.createDataFrame(
-        data,
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    return spark.createDataFrame(data, _DOCS_SCHEMA)
+
+
+def _sketch_corpus(spark):
+    """Shared-word docs (20-member token keys, salted at
+    hot_key_cap=4), unrelated docs that share only "common" with them
+    (the hamming and dot cuts have work to do), and two text-free
+    media-only docs on one media key."""
+    words = "zebra penguin iceberg harbor violin quartz meadow lantern"
+    vocab = words.split()
+    return _docs(
+        spark,
+        [(f"d{i:02d}", f"entity number {i % 7} common words", []) for i in range(20)]
+        + [
+            (f"u{i}", f"common {vocab[i]} {vocab[(i + 3) % 8]}", [])
+            for i in range(8)
+        ]
+        + [("m1", "", ["mX"]), ("m2", "", ["mX"])],
     )
+
+
+# on _sketch_corpus the int8-dot survivors reach hamming 13, so a cut
+# at 10 drops pairs the dot would keep: the hamming phase does work of
+# its own (the default 21 cuts nothing the dot does not)
+_HAMMING_CUT = 10
+
+
+def _pairs_cos(pairs):
+    return {(r.doc_a, r.doc_b): r.s_cos for r in pairs.collect()}
+
+
+def _assert_fused_equals_plain(dn, cfg, scfg):
+    plain, metrics = candidate_pairs(dn, cfg)
+    fused, _ = candidate_pairs(dn, cfg, score_cfg=scfg)
+    assert metrics.where(F.col("class") == "salted").count() > 0
+    expected = _pairs_cos(sketch_prefilter(plain, dn, scfg))
+    got = _pairs_cos(fused)
+    assert got == expected and len(got) > 0
+    # the prefilter cut something
+    assert len(got) < plain.count()
+    # media-only docs pass the cut without any lexical signal
+    assert ("m1", "m2") in got
 
 
 class TestBlockingKeys:
@@ -134,32 +182,48 @@ class TestCandidatePairs:
         assert got == {("d1", "d2")}  # only via shared 'unique' token
 
     def test_fused_sketch_prefilter_equivalence(self, spark):
-        # fusing the sketch cut into pair generation must equal
-        # plain pair generation followed by the standalone prefilter
-        from chameleon_entity_linking_spark.operators.score import (
-            ScoreConfig,
-            sketch_prefilter,
+        # fusing the sketch cut into pair generation (the sign sketch
+        # riding the key table) must equal plain pair generation
+        # followed by the standalone prefilter — same pairs, same s_cos
+        dn = normalize(_sketch_corpus(spark))
+        cfg = BlockConfig(hot_key_cap=4)
+        _assert_fused_equals_plain(
+            dn, cfg, ScoreConfig(prefilter_max_hamming=_HAMMING_CUT)
         )
 
-        docs = _docs(
-            spark,
-            [(f"d{i}", f"entity number {i % 7} common words", []) for i in range(20)]
-            + [("m1", "", ["mX"]), ("m2", "", ["mX"])],
+    def test_fused_sketch_prefilter_equivalence_without_hamming(self, spark):
+        # prefilter_max_hamming=None: the sketch still carries the
+        # media-only flag; only the hamming term is skipped
+        dn = normalize(_sketch_corpus(spark))
+        cfg = BlockConfig(hot_key_cap=4)
+        _assert_fused_equals_plain(
+            dn, cfg, ScoreConfig(prefilter_max_hamming=None)
         )
-        dn = normalize(docs)
-        cfg = BlockConfig()
-        scfg = ScoreConfig()
-        plain, _ = candidate_pairs(dn, cfg)
-        fused, _ = candidate_pairs(dn, cfg, score_cfg=scfg)
-        expected = {
-            (r.doc_a, r.doc_b)
-            for r in sketch_prefilter(plain, dn, scfg)
-            .select("doc_a", "doc_b")
-            .collect()
-        }
-        got = {(r.doc_a, r.doc_b) for r in fused.select("doc_a", "doc_b").collect()}
+
+    @pytest.mark.parametrize("max_hamming", [_HAMMING_CUT, None])
+    def test_fused_incremental_sketch_prefilter_equivalence(
+        self, spark, max_hamming
+    ):
+        # the delta path: the fused incremental pairs must equal the
+        # plain incremental pairs followed by the standalone prefilter
+        from chameleon_entity_linking_spark.operators.incremental_er import (
+            incremental_candidate_pairs,
+        )
+
+        rows = _sketch_corpus(spark).collect()
+        base = normalize(spark.createDataFrame(rows[::2], _DOCS_SCHEMA))
+        new = normalize(spark.createDataFrame(rows[1::2], _DOCS_SCHEMA))
+        dn_all = base.unionByName(new)
+        cfg = BlockConfig(hot_key_cap=4)
+        scfg = ScoreConfig(prefilter_max_hamming=max_hamming)
+        committed_keys = blocking_keys(base, cfg)
+        plain = incremental_candidate_pairs(new, committed_keys, cfg)
+        fused = incremental_candidate_pairs(
+            new, committed_keys, cfg, score_cfg=scfg, doc_norm_all=dn_all
+        )
+        expected = _pairs_cos(sketch_prefilter(plain, dn_all, scfg))
+        got = _pairs_cos(fused)
         assert got == expected and len(got) > 0
-        # media-only docs pass the cut without any lexical signal
         assert ("m1", "m2") in got
 
     def test_md5_tokens_lsh_family_matches_kernel(self, spark):

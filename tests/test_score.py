@@ -210,6 +210,16 @@ class TestScorePairs:
         assert plan.count("zip_with") <= 3, plan
 
 
+def _dot_q(a, b):
+    """JVM-side int8 dot -> cosine estimate in [-1, 1]: the interpreted
+    HOF fold the Arrow UDF replaced, kept as its parity reference."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("int") * y.cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(127.0 * 127.0)
+
+
 class TestInt8DotUdf:
     def test_arrow_dot_matches_jvm_fold_bitwise(self, spark):
         """r6 optimization guard: the Arrow-batched int8 dot
@@ -219,7 +229,6 @@ class TestInt8DotUdf:
         import random
 
         from chameleon_entity_linking_spark.operators.score import (
-            _dot_q,
             _int8_dot_udf,
         )
 

@@ -1,0 +1,33 @@
+"""Session defaults: the driver heap is sized from the host."""
+
+from chameleon_entity_linking_spark.operators.cluster import _parse_jvm_mem_mb
+from chameleon_entity_linking_spark.plans.session import default_driver_mem
+
+
+def _meminfo(tmp_path, total_kb):
+    p = tmp_path / "meminfo"
+    p.write_text(
+        f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n"
+    )
+    return str(p)
+
+
+def test_default_driver_mem_below_physical_memory():
+    with open("/proc/meminfo") as f:
+        total_kb = next(
+            int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+        )
+    mb = _parse_jvm_mem_mb(default_driver_mem())
+    assert 0 < mb < total_kb / 1024
+    assert mb <= 24 * 1024
+
+
+def test_default_driver_mem_share_and_cap(tmp_path):
+    # 16 GiB host -> 40% of it; 256 GiB host -> the 24g cap
+    small = _parse_jvm_mem_mb(default_driver_mem(_meminfo(tmp_path, 16 << 20)))
+    assert small == int(16 * 1024 * 0.4)
+    assert default_driver_mem(_meminfo(tmp_path, 256 << 20)) == "24g"
+
+
+def test_default_driver_mem_without_meminfo(tmp_path):
+    assert default_driver_mem(str(tmp_path / "absent")) == "24g"
