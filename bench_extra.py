@@ -3,13 +3,14 @@
 ``bench.py`` is the frozen driver contract; this file is the
 developer-side instrument: it times any subset of the registry
 queries with the noop sink (computation only, no sink cost), captures
-``explain("formatted")`` plans into ``plans/r06/``, and labels each
-job so eventlogs/UI attribute time to the right query.
+``explain("formatted")`` plans into the ``--explain`` directory (one
+``<query>_<suffix>.txt`` per query), and labels each job so
+eventlogs/UI attribute time to the right query.
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 \
       --queries simhash,connected_components --reps 2 \
-      --explain plans/r06 --suffix before
+      --explain plans/<round> --suffix before
 """
 
 from __future__ import annotations

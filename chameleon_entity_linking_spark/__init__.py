@@ -23,7 +23,7 @@ Layout:
   sources/    catalog shim (Iceberg-shaped commits over parquet),
               synthetic interleaved-documents generator, readers
   functions/  vectorized numpy/pandas kernels: string similarity,
-              MinHash, hashing-trick embeddings, text stats
+              MinHash, hashing-trick embeddings
   operators/  blocking, scoring, clustering, dedup, similarity
               search, text analysis — DataFrame-first operators
   plans/      SparkSession factory, pipeline orchestration, resume

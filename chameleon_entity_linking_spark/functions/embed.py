@@ -34,7 +34,6 @@ import numpy as np
 from chameleon_entity_linking_spark.functions.minhash import (
     _splitmix64,
     pack_char3_windows,
-    shingle_base_hash,
 )
 
 DEFAULT_DIM = 64
@@ -94,28 +93,3 @@ def encode_hashed_batch(
     norms[norms == 0] = 1.0
     return out / norms
 
-
-# byte-identical to the minhash family's base hash — one construction
-_feature_hash = shingle_base_hash
-
-
-def encode_batch(token_lists: list[list[str]], dim: int = DEFAULT_DIM) -> np.ndarray:
-    """Standalone-string entry point (tests / ad-hoc use): hashes
-    tokens driver-side (md5 base hash) then reuses the vectorized
-    core. The pipeline path is ``encode_hashed_batch`` — the JVM
-    supplies the token hashes, so no string ever re-hashes in Python."""
-    hashes = [
-        np.fromiter(
-            (_feature_hash(t) for t in toks), dtype=_U64, count=len(toks)
-        ).view(np.int64)
-        for toks in token_lists
-    ]
-    texts = [" ".join(toks) for toks in token_lists]
-    return encode_hashed_batch(hashes, texts, dim)
-
-
-def cosine_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise cosine of two (n, d) matrices; zero vectors -> 0.0."""
-    num = np.einsum("ij,ij->i", a, b)
-    den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-    return np.where(den == 0, 0.0, num / np.where(den == 0, 1.0, den))

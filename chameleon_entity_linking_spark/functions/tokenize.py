@@ -7,13 +7,10 @@ zero external models and expressible identically in Spark SQL and
 DuckDB (for oracle checks).
 
 The *hot path* is pure JVM (`F.lower` + `F.split` — whole-stage
-codegen, no Python); the BPE-ish sub-word splitter used for text
-analysis runs as an Arrow-batched pandas UDF.
+codegen, no Python).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -22,21 +19,12 @@ from pyspark.sql import functions as F
 # so Spark and DuckDB agree byte-for-byte on any input.
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
-# BPE-ish word-piece pattern: leading space groups, numbers, words,
-# punctuation runs (GPT-2-style pre-tokenizer shape, simplified).
-BPE_ISH_RE = re.compile(r"[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]+")
-
 
 def tokens_col(text: Column) -> Column:
     """array<string> of normalized tokens; empties removed (JVM-side)."""
     return F.filter(
         F.split(F.lower(text), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
     )
-
-
-def bpe_ish_tokens(text: str) -> list[str]:
-    """Sub-word-ish token split for token-count analytics (Python side)."""
-    return BPE_ISH_RE.findall(text or "")
 
 
 def char_shingles(tokens: list[str], k: int = 3) -> list[str]:

@@ -67,7 +67,6 @@ def incremental_candidate_pairs(
     score_cfg: ScoreConfig | None = None,
     doc_norm_all: DataFrame | None = None,
     persisted_out: list | None = None,
-    broadcast_delta: bool = True,
     new_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs between a new batch and the committed corpus.
@@ -83,11 +82,8 @@ def incremental_candidate_pairs(
     key table and the sketch prefilter fuses into the expansion
     exactly like the batch path.
 
-    ``broadcast_delta`` (default True) hints the new-doc-id membership
-    probes as broadcasts — correct while the delta batch is small
-    relative to the corpus (the design point). For a delta too large
-    for the driver/broadcast threshold, pass False and let AQE pick
-    the join strategy from runtime sizes. ``new_keys`` optionally
+    The new-doc-id membership probes broadcast: the delta batch is
+    small relative to the corpus by design. ``new_keys`` optionally
     supplies a precomputed (e.g. committed) key table for the new
     batch; by default keys are derived here.
     """
@@ -96,7 +92,6 @@ def incremental_candidate_pairs(
         new_keys = blocking_keys(new_norm, cfg).persist()
         if persisted_out is not None:
             persisted_out.append(new_keys)
-    hint = F.broadcast if broadcast_delta else (lambda df: df)
     # keys with no new member cannot form a new pair: one semi-join
     # restricts the committed key table to the touched slice before
     # any expansion work. (At scale this is the step that makes the
@@ -115,12 +110,12 @@ def incremental_candidate_pairs(
     raw, _metrics = expand_key_pairs(keys, cfg, persisted_out, sketch=sketch)
     # keep only pairs with >= 1 new endpoint. The new-doc id set is
     # the batch — small relative to the corpus — so both membership
-    # probes broadcast (when hinted).
+    # probes broadcast.
     new_ids = new_norm.select("doc_id").distinct()
-    na = hint(
+    na = F.broadcast(
         new_ids.select(F.col("doc_id").alias("doc_a"), F.lit(True).alias("new_a"))
     )
-    nb = hint(
+    nb = F.broadcast(
         new_ids.select(F.col("doc_id").alias("doc_b"), F.lit(True).alias("new_b"))
     )
     raw = (
@@ -138,7 +133,6 @@ def merge_clusters(
     committed_assignments: DataFrame,
     new_edges: DataFrame,
     all_docs: DataFrame,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Merge new edges into committed clusters, re-clustering only the
     affected components.
@@ -156,25 +150,22 @@ def merge_clusters(
     other committed cluster keeps its id without any recomputation
     (the re-clustered subgraph is proportional to the delta).
 
-    ``broadcast_delta`` (default True) hints the new-edge-endpoint and
-    affected-cluster probe sets as broadcasts — both are O(delta) by
-    construction. Pass False for a delta batch past the broadcast
-    threshold and AQE decides from runtime sizes instead.
+    The new-edge-endpoint and affected-cluster probe sets broadcast:
+    both are O(delta) by construction.
     """
-    hint = F.broadcast if broadcast_delta else (lambda df: df)
     ends = (
         new_edges.select(F.col("doc_a").alias("doc_id"))
         .unionByName(new_edges.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     affected = (
-        committed_assignments.join(hint(ends), "doc_id", "left_semi")
+        committed_assignments.join(F.broadcast(ends), "doc_id", "left_semi")
         .select("cluster_id")
         .distinct()
     )
     star = (
         committed_assignments.join(
-            hint(affected), "cluster_id", "left_semi"
+            F.broadcast(affected), "cluster_id", "left_semi"
         )
         .where(F.col("doc_id") != F.col("cluster_id"))
         .select(
@@ -205,7 +196,6 @@ def incremental_er_update(
     committed_assignments: DataFrame,
     block_cfg: BlockConfig,
     score_cfg: ScoreConfig,
-    broadcast_delta: bool = True,
     new_norm: DataFrame | None = None,
     new_keys: DataFrame | None = None,
     persisted_out: list | None = None,
@@ -219,8 +209,7 @@ def incremental_er_update(
     tests/test_incremental_er.py for the catalog-integrated flow.
     ``new_norm``/``new_keys`` optionally supply already-materialized
     features/keys for the batch (the pipeline commits both, so the
-    next increment starts from committed tables); ``broadcast_delta``
-    gates every O(delta) broadcast hint (see merge_clusters).
+    next increment starts from committed tables).
 
     ``persisted_out``: the step ``.persist()``s intermediates (key
     counts, grouped buckets, an internally-derived ``new_norm``) that
@@ -244,7 +233,6 @@ def incremental_er_update(
         score_cfg=score_cfg,
         doc_norm_all=doc_norm_all,
         persisted_out=persisted,
-        broadcast_delta=broadcast_delta,
         new_keys=new_keys,
     )
     new_edges = edges_above_threshold(
@@ -253,7 +241,5 @@ def incremental_er_update(
     all_docs = committed_assignments.select("doc_id").unionByName(
         new_docs.select("doc_id")
     )
-    merged = merge_clusters(
-        committed_assignments, new_edges, all_docs, broadcast_delta
-    )
+    merged = merge_clusters(committed_assignments, new_edges, all_docs)
     return new_edges, merged

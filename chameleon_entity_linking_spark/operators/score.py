@@ -94,21 +94,6 @@ class ScoreConfig:
         # calibrated with the sweep above, guarded by the same F1
         # gate. None disables phase 0 (the dot sees every raw pair).
         prefilter_max_hamming: int | None = 21,
-        # W5 length-sorted batching (`BiEncoder/model.py:99-100`): sort
-        # within partitions by name length before the string-kernel
-        # UDFs so each Arrow batch pads to its own (short) max length —
-        # the batched 2-D kernels' work scales with batch max length.
-        # No shuffle (sortWithinPartitions); order-insensitive output.
-        length_sort: bool = True,
-        # broadcast the per-doc sketch tables (the (doc_id, sig,
-        # media-only) sign sketch that rides the key table, and the
-        # (doc_id, emb_q) table the hamming survivors join): ~70B/doc,
-        # so they broadcast comfortably to ~10^8 docs. Planner size
-        # estimates come from the FULL doc_norm parquet (wide
-        # embedding/spans columns), so without the hint the much larger
-        # side gets shuffled instead (measured: +30s at 193k docs). Set
-        # False past broadcast scale — the joins then shuffle.
-        broadcast_sketch: bool = True,
     ):
         self.w_jw = w_jw
         self.w_lev = w_lev
@@ -121,8 +106,6 @@ class ScoreConfig:
         self.cascade = cascade
         self.prefilter_min_cheap = prefilter_min_cheap
         self.prefilter_max_hamming = prefilter_max_hamming
-        self.length_sort = length_sort
-        self.broadcast_sketch = broadcast_sketch
 
     @property
     def sketch_fused(self) -> bool:
@@ -148,24 +131,17 @@ def _make_udfs():
     return jw_udf, lev_ratio_udf
 
 
-def _features(
-    doc_norm: DataFrame, side: str, max_name_chars: int | None = None
-) -> DataFrame:
+def _features(doc_norm: DataFrame, side: str) -> DataFrame:
     # hashed token/media sets (not the strings): the per-pair set
     # intersections run on int64 (2.4x cheaper, measured) and the
     # feature row is narrower through the pair join. emb_q (64B int8),
     # not the float embedding: cosine is computed in int8 throughout
     # scoring (error <= ~0.02; the pinned threshold is calibrated with
     # it, F1-gate-guarded) so the widest feature never joins the pair
-    # stream. Names truncate HERE, before the feature shuffle (the
-    # string kernels cap at max_name_chars anyway — shuffling the tail
-    # would be pure wasted bytes).
-    name = F.col("name_text")
-    if max_name_chars is not None:
-        name = F.substring(name, 1, max_name_chars)
+    # stream. Names are not here: they join the cheap-phase survivors
+    # only (_name_features).
     return doc_norm.select(
         F.col("doc_id").alias(f"doc_{side}"),
-        name.alias(f"name_{side}"),
         F.col("tokens_h").alias(f"tokens_{side}"),
         F.col("media_h").alias(f"media_{side}"),
         F.col("emb_q").alias(f"q_{side}"),
@@ -173,16 +149,15 @@ def _features(
 
 
 def _name_features(
-    doc_norm: DataFrame, side: str, max_name_chars: int | None
+    doc_norm: DataFrame, side: str, max_name_chars: int
 ) -> DataFrame:
     """(doc_{side}, name_{side}) only — joined to cheap-phase
     SURVIVORS, so the 100-char names never ride the full pair stream
     (r6, guide §2.3: the cheap phase decides on set/sketch features
     alone; measured at sf1.0 the names were ~40% of the bytes flowing
-    through the 22.5M-pair cheap projection)."""
-    name = F.col("name_text")
-    if max_name_chars is not None:
-        name = F.substring(name, 1, max_name_chars)
+    through the 22.5M-pair cheap projection). Names truncate here,
+    before the join: the string kernels cap at max_name_chars anyway."""
+    name = F.substring(F.col("name_text"), 1, max_name_chars)
     return doc_norm.select(
         F.col("doc_id").alias(f"doc_{side}"), name.alias(f"name_{side}")
     )
@@ -268,10 +243,9 @@ def _hamming_cut(doc_norm: DataFrame, cfg: ScoreConfig) -> int | None:
 def sign_sketch(doc_norm: DataFrame, cfg: ScoreConfig) -> DataFrame:
     """(doc_id, sig, mo): the per-doc phase-0 sketch — the 64-bit
     embedding sign sketch (null when the hamming cut does not apply)
-    and the media-only flag, broadcast-hinted per
-    ``cfg.broadcast_sketch``. Pair generation joins it onto the key
-    table (block.expand_key_pairs ``sketch=``), so the raw pair stream
-    is born carrying both sides' sketches."""
+    and the media-only flag, broadcast-hinted. Pair generation joins it
+    onto the key table (block.expand_key_pairs ``sketch=``), so the raw
+    pair stream is born carrying both sides' sketches."""
     sig = (
         F.col("emb_sig")
         if _hamming_cut(doc_norm, cfg) is not None
@@ -280,7 +254,8 @@ def sign_sketch(doc_norm: DataFrame, cfg: ScoreConfig) -> DataFrame:
     sketch = doc_norm.select(
         "doc_id", sig.alias("sig"), _mediaonly().alias("mo")
     )
-    return F.broadcast(sketch) if cfg.broadcast_sketch else sketch
+    # with the emb_q tables ~70B/doc: broadcastable to ~10^8 docs
+    return F.broadcast(sketch)
 
 
 def sketch_prefilter(
@@ -329,14 +304,15 @@ def sketch_prefilter(
     if cut is not None:
         ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         pairs = pairs.where(mediaonly | (ham <= F.lit(cut)))
-    qa = doc_norm.select(
-        F.col("doc_id").alias("doc_a"), F.col("emb_q").alias("q_a")
+    # broadcast: planner size estimates come from the FULL doc_norm
+    # parquet, so unhinted the much larger pair side gets shuffled
+    # instead (measured: +30s at 193k docs)
+    qa = F.broadcast(
+        doc_norm.select(F.col("doc_id").alias("doc_a"), F.col("emb_q").alias("q_a"))
     )
-    qb = doc_norm.select(
-        F.col("doc_id").alias("doc_b"), F.col("emb_q").alias("q_b")
+    qb = F.broadcast(
+        doc_norm.select(F.col("doc_id").alias("doc_b"), F.col("emb_q").alias("q_b"))
     )
-    if cfg.broadcast_sketch:
-        qa, qb = F.broadcast(qa), F.broadcast(qb)
     joined = (
         pairs.select("doc_a", "doc_b", "mediaonly_a", "mediaonly_b")
         .join(qa, "doc_a")
@@ -377,8 +353,8 @@ def score_pairs(
     # instead of re-running the dot per pair (and drop the emb_q
     # sketches from the feature join entirely: narrower pair rows)
     has_cos = "s_cos" in pairs.columns
-    fa = _features(doc_norm, "a", cfg.max_name_chars).drop("name_a")
-    fb = _features(doc_norm, "b", cfg.max_name_chars).drop("name_b")
+    fa = _features(doc_norm, "a")
+    fb = _features(doc_norm, "b")
     if has_cos:
         fa, fb = fa.drop("q_a"), fb.drop("q_b")
     joined = pairs.join(fa, "doc_a").join(fb, "doc_b")
@@ -462,11 +438,14 @@ def score_pairs(
     # kernels AND the Arrow transfer; explicit repartition because AQE
     # coalesces by bytes while pandas-UDF cost is per-row CPU
     spark = pairs.sparkSession
-    survivors = cheap.repartition(spark.sparkContext.defaultParallelism)
-    if cfg.length_sort:
-        # W5: length-homogeneous Arrow batches for the 2-D kernels
-        survivors = survivors.sortWithinPartitions(F.length("name_a"))
-    survivors = survivors.withColumn("s_jw", jw_udf("name_a", "name_b"))
+    # W5 length-sorted batching (`BiEncoder/model.py:99-100`): each
+    # Arrow batch pads to its own (short) max length — the batched 2-D
+    # kernels' work scales with batch max length. No shuffle.
+    survivors = (
+        cheap.repartition(spark.sparkContext.defaultParallelism)
+        .sortWithinPartitions(F.length("name_a"))
+        .withColumn("s_jw", jw_udf("name_a", "name_b"))
+    )
     if cfg.cascade:
         # JW-refined lossless upper bound BETWEEN the two kernels:
         # Jaro-Winkler is O(n) per pair, Levenshtein O(n^2) — so

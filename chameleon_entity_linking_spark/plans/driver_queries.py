@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chameleon_entity_linking_spark.functions.textstats import LANG_MARKERS
 from chameleon_entity_linking_spark.sources.readers import load
 
 # --------------------------------------------------------------------------
@@ -413,6 +412,24 @@ FROM (
 # --------------------------------------------------------------------------
 # Text-analysis operators over `documents` (training-data pipeline ops)
 # --------------------------------------------------------------------------
+
+# Tiny stopword inventories for an n-gram/stopword-ratio language
+# heuristic. Deliberately small + frozen: the point is deterministic,
+# cheap language ID, not linguistic accuracy.
+LANG_MARKERS: dict[str, frozenset[str]] = {
+    "en": frozenset(
+        "the of and to in is that it was for on are with as his they at be this".split()
+    ),
+    "de": frozenset(
+        "der die das und ist nicht ein eine mit von zu im den des sich auf".split()
+    ),
+    "fr": frozenset(
+        "le la les et des est une dans que pour pas sur avec ne son ce il".split()
+    ),
+    "es": frozenset(
+        "el la los las y es una en que por no con para su se del al como".split()
+    ),
+}
 
 
 def q_normalize_tokens(spark: SparkSession, sf: str) -> DataFrame:

@@ -9,14 +9,10 @@ history with per-commit metrics, read-of-last-committed-snapshot —
 so every stage boundary is a durable, resumable checkpoint
 (north rule: "resumes from the last committed checkpoint").
 
-Backend selection:
-- If the SparkSession has an Iceberg catalog configured
-  (``spark.sql.catalog.<name>`` with iceberg-spark-runtime on the
-  classpath), ``IcebergCatalog`` delegates to real Iceberg tables.
-- Otherwise (this sandbox) ``ParquetCatalog`` stores each snapshot as
-  an immutable parquet directory plus a JSON manifest whose atomic
-  rename *is* the commit — same semantics: readers only ever see the
-  last committed snapshot; a crashed writer leaves no partial state.
+``ParquetCatalog`` stores each snapshot as an immutable parquet
+directory plus a JSON manifest whose atomic rename *is* the commit —
+Iceberg's semantics: readers only ever see the last committed
+snapshot; a crashed writer leaves no partial state.
 
 Layout (ParquetCatalog):
     <warehouse>/<table>/snap-<n>/part-*.parquet   immutable data
@@ -437,36 +433,3 @@ class ParquetCatalog:
     def drop(self, table: str) -> None:
         self.fs.delete(self._table_dir(table))
 
-
-class IcebergCatalog:
-    """Sketch of the Iceberg write/read mapping for sessions with the
-    runtime jar configured (not available in this sandbox). NOT a
-    drop-in for ParquetCatalog: it covers exists/write/read only — no
-    Snapshot surface (current_snapshot/history/total_rows), so
-    Pipeline's resume fingerprints and replay guards do not work
-    against it. Running the pipeline on real Iceberg means
-    implementing those from Iceberg's own snapshot metadata
-    (snapshot-id, summary counts) — a mechanical mapping, deliberately
-    not faked here."""
-
-    def __init__(self, spark: SparkSession, catalog_name: str, namespace: str = "db"):
-        self.spark = spark
-        self.prefix = f"{catalog_name}.{namespace}"
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.prefix}")
-
-    def _fqn(self, table: str) -> str:
-        return f"{self.prefix}.{table}"
-
-    def exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._fqn(table))
-
-    def write(self, table, df, mode="overwrite", lineage=None, metrics=None,
-              partition_by=None):
-        writer = df.writeTo(self._fqn(table))
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-
-    def read(self, spark, table):
-        return spark.read.table(self._fqn(table))

@@ -1,6 +1,8 @@
 """Blocking: pair completeness, canonicalization, salting exactness
 (SURVEY.md §5.1 "salting (pair generated exactly once)")."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,7 +68,60 @@ def _pairs_cos(pairs):
     return {(r.doc_a, r.doc_b): r.s_cos for r in pairs.collect()}
 
 
+@contextmanager
+def _hinted_broadcasts_only(spark):
+    """Disable size-based broadcasts, so a BroadcastHashJoin in a plan
+    built inside comes from an explicit hint. Cached sub-plans are
+    planned at persist() time, so build the DataFrames inside."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _broadcast_build_sides(df):
+    """Column-name sets of every BroadcastHashJoin build side in
+    ``df``'s executed plan, cached sub-plans included. Call after an
+    action on ``df``, so adaptive plans are final."""
+    builds = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "InMemoryTableScan":
+            stack.append(node.relation().cachedPlan())
+            continue
+        if name == "BroadcastHashJoin":
+            right = node.buildSide().toString() == "BuildRight"
+            out = (node.right() if right else node.left()).output()
+            builds.append({out.apply(i).name() for i in range(out.size())})
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return builds
+
+
+def _assert_broadcast(builds, *cols):
+    assert any(set(cols) <= b for b in builds), (cols, builds)
+
+
+def _assert_sketch_joins_broadcast(builds):
+    # the sign sketch onto the key table, and each side's emb_q table
+    # onto the hamming survivors
+    for cols in (("doc_id", "mo"), ("doc_a", "q_a"), ("doc_b", "q_b")):
+        _assert_broadcast(builds, *cols)
+
+
 def _assert_fused_equals_plain(dn, cfg, scfg):
+    """Returns the fused pairs, collected."""
     plain, metrics = candidate_pairs(dn, cfg)
     fused, _ = candidate_pairs(dn, cfg, score_cfg=scfg)
     assert metrics.where(F.col("class") == "salted").count() > 0
@@ -77,6 +132,7 @@ def _assert_fused_equals_plain(dn, cfg, scfg):
     assert len(got) < plain.count()
     # media-only docs pass the cut without any lexical signal
     assert ("m1", "m2") in got
+    return fused
 
 
 class TestBlockingKeys:
@@ -185,11 +241,13 @@ class TestCandidatePairs:
         # fusing the sketch cut into pair generation (the sign sketch
         # riding the key table) must equal plain pair generation
         # followed by the standalone prefilter — same pairs, same s_cos
-        dn = normalize(_sketch_corpus(spark))
-        cfg = BlockConfig(hot_key_cap=4)
-        _assert_fused_equals_plain(
-            dn, cfg, ScoreConfig(prefilter_max_hamming=_HAMMING_CUT)
-        )
+        with _hinted_broadcasts_only(spark):
+            dn = normalize(_sketch_corpus(spark))
+            cfg = BlockConfig(hot_key_cap=4)
+            fused = _assert_fused_equals_plain(
+                dn, cfg, ScoreConfig(prefilter_max_hamming=_HAMMING_CUT)
+            )
+            _assert_sketch_joins_broadcast(_broadcast_build_sides(fused))
 
     def test_fused_sketch_prefilter_equivalence_without_hamming(self, spark):
         # prefilter_max_hamming=None: the sketch still carries the
@@ -211,20 +269,26 @@ class TestCandidatePairs:
         )
 
         rows = _sketch_corpus(spark).collect()
-        base = normalize(spark.createDataFrame(rows[::2], _DOCS_SCHEMA))
-        new = normalize(spark.createDataFrame(rows[1::2], _DOCS_SCHEMA))
-        dn_all = base.unionByName(new)
-        cfg = BlockConfig(hot_key_cap=4)
-        scfg = ScoreConfig(prefilter_max_hamming=max_hamming)
-        committed_keys = blocking_keys(base, cfg)
-        plain = incremental_candidate_pairs(new, committed_keys, cfg)
-        fused = incremental_candidate_pairs(
-            new, committed_keys, cfg, score_cfg=scfg, doc_norm_all=dn_all
-        )
-        expected = _pairs_cos(sketch_prefilter(plain, dn_all, scfg))
-        got = _pairs_cos(fused)
-        assert got == expected and len(got) > 0
-        assert ("m1", "m2") in got
+        with _hinted_broadcasts_only(spark):
+            base = normalize(spark.createDataFrame(rows[::2], _DOCS_SCHEMA))
+            new = normalize(spark.createDataFrame(rows[1::2], _DOCS_SCHEMA))
+            dn_all = base.unionByName(new)
+            cfg = BlockConfig(hot_key_cap=4)
+            scfg = ScoreConfig(prefilter_max_hamming=max_hamming)
+            committed_keys = blocking_keys(base, cfg)
+            plain = incremental_candidate_pairs(new, committed_keys, cfg)
+            fused = incremental_candidate_pairs(
+                new, committed_keys, cfg, score_cfg=scfg, doc_norm_all=dn_all
+            )
+            expected = _pairs_cos(sketch_prefilter(plain, dn_all, scfg))
+            got = _pairs_cos(fused)
+            assert got == expected and len(got) > 0
+            assert ("m1", "m2") in got
+            # the new-endpoint membership probes broadcast too
+            builds = _broadcast_build_sides(fused)
+            _assert_sketch_joins_broadcast(builds)
+            _assert_broadcast(builds, "doc_a", "new_a")
+            _assert_broadcast(builds, "doc_b", "new_b")
 
     def test_md5_tokens_lsh_family_matches_kernel(self, spark):
         from chameleon_entity_linking_spark.functions.minhash import minhash_md5
