@@ -55,7 +55,7 @@ def _er_pipeline_from_docs(
         score_pairs,
     )
 
-    # normalize() spreads rows itself (repartition=True default) — a
+    # normalize() spreads rows itself — a
     # second outer repartition here was one redundant full shuffle of
     # the raw corpus (r6); docs feeds assign_clusters via a join,
     # which needs no pre-spread

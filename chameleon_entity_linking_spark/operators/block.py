@@ -4,14 +4,15 @@ The analogue of the reference's candidate generation — BM25 run files
 (`BiEncoder/test.py:63-79`) and FAISS top-k retrieval
 (`BiEncoder/test_retrieval.py:51-76`). A global ANN index cannot
 exist at 10^12 docs, so candidate generation becomes a
-hash-partitioned pair expansion over three key families:
+hash-partitioned pair expansion over three key families, each key an
+int64 hash salted by its family tag:
 
-  t:<token>      tokens of the *name* span (entity-name terms — the
-                 BM25-term analogue)
-  l:<band>       MinHash-LSH band keys over char-3-shingles of the
-                 full normalized text (the dense-recall analogue)
-  m:<media_ref>  exact media content hashes (the exact entity-title
-                 key analogue, `BiEncoder/model.py:404`)
+  t  tokens of the *name* span (entity-name terms — the BM25-term
+     analogue)
+  l  MinHash-LSH band keys over char-3-shingles of the full
+     normalized text (the dense-recall analogue)
+  m  exact media content hashes (the exact entity-title key analogue,
+     `BiEncoder/model.py:404`)
 
 Physical shape (grouped expansion, not a self-join): a cheap
 map-side-combined count pass classifies keys; surviving keys are
@@ -78,7 +79,6 @@ class BlockConfig:
         # at 64; raise it (with hot_key_cap below it) to re-engage the
         # salted triangle path for recall-critical corpora.
         max_key_docs: int = 64,
-        minhash_seed: int = 42,
         use_token_keys: bool = True,
         use_lsh_keys: bool = True,
         use_media_keys: bool = True,
@@ -119,12 +119,6 @@ class BlockConfig:
         # not listed here use ``max_key_docs``; every family stays
         # bounded by ``hot_key_cap * max_salts``.
         family_ceilings: dict[str, int] | None = None,
-        # diagnostics: keep the human-readable key strings through the
-        # shuffle + in key_metrics (default hashes them to 64-bit ints
-        # for shuffle compactness; a 64-bit collision, P ~ 1e-7 at
-        # millions of keys, just adds one junk candidate pair that
-        # scoring rejects)
-        debug_keys: bool = False,
     ):
         assert lsh_hashes % lsh_bands == 0
         self.lsh_hashes = lsh_hashes
@@ -133,7 +127,6 @@ class BlockConfig:
         self.hot_key_cap = hot_key_cap
         self.max_salts = max_salts
         self.max_key_docs = max_key_docs
-        self.minhash_seed = minhash_seed
         self.use_token_keys = use_token_keys
         self.use_lsh_keys = use_lsh_keys
         self.use_media_keys = use_media_keys
@@ -148,10 +141,27 @@ class BlockConfig:
                 f"unknown family tags: {set(family_ceilings)}"
             )
         self.family_ceilings = family_ceilings
-        self.debug_keys = debug_keys
 
     def fingerprint(self) -> dict:
         return dict(vars(self))
+
+    def key_fingerprint(self) -> dict:
+        """The fields that change WHICH keys a document emits — the
+        committed blocking_keys table's identity. Cap/ceiling/salting
+        knobs are deliberately left out: they shape the pair
+        EXPANSION, not the keys, so retuning them resumes from the
+        committed key table instead of re-deriving it (the whole point
+        of committing keys at 10^12 docs)."""
+        return {
+            "lsh_hashes": self.lsh_hashes,
+            "lsh_bands": self.lsh_bands,
+            "rows_per_band": self.rows_per_band,
+            "use_token_keys": self.use_token_keys,
+            "use_lsh_keys": self.use_lsh_keys,
+            "use_media_keys": self.use_media_keys,
+            "lsh_family": self.lsh_family,
+            "lsh2_bands": self.lsh2_bands,
+        }
 
 
 def _no_band_mask(tokens: pd.Series) -> list[bool]:
@@ -199,54 +209,11 @@ def _lsh_keys_udf(cfg: BlockConfig):
     # Token-less docs (e.g. media-only) emit NO band keys in every
     # family (shared ``_no_band_mask``): the md5 family gets this for
     # free (unnest of an empty token list produces no signature row),
-    # and the fast/debug families must mirror it — hashing the all-max
+    # and the fast family must mirror it — hashing the all-max
     # sentinel signature would give every token-less doc the SAME band
     # keys, i.e. one giant junk blocking bucket. Media-only docs pair
     # via media keys.
-    if cfg.debug_keys:
-        # readable string keys for diagnostics, derived from the SAME
-        # signatures + band folds as the production fast path (one
-        # shared computation, rendered as strings) — debug-mode bucket
-        # membership is bit-identical to what the fast config builds,
-        # so "why did/didn't these docs co-bucket" reads the real
-        # buckets. Family order matches the fast UDF: all "l" short
-        # bands first, then the "l2" long bands, so the positional
-        # family tagging in blocking_keys applies to both.
-        @F.pandas_udf("array<string>")
-        def lsh_keys(tokens: pd.Series) -> pd.Series:
-            import numpy as np
-
-            texts = [" ".join(t) for t in tokens]
-            sigs = minhash_fast_from_texts(
-                texts, n_hashes=cfg.lsh_hashes, seed=cfg.minhash_seed
-            )
-            bh = band_hashes(sigs, cfg.lsh_bands, cfg.rows_per_band)
-            fams = ["l"] * cfg.lsh_bands
-            if cfg.lsh2_bands:
-                bh = np.concatenate(
-                    [
-                        bh,
-                        band_hashes(
-                            sigs,
-                            cfg.lsh2_bands,
-                            cfg.lsh_hashes // cfg.lsh2_bands,
-                            lane_offset=cfg.lsh_bands,
-                        ),
-                    ],
-                    axis=1,
-                )
-                fams += ["l2"] * cfg.lsh2_bands
-            return pd.Series(
-                [
-                    []
-                    if empty
-                    else [f"{f}:{int(k)}" for f, k in zip(fams, keys)]
-                    for keys, empty in zip(bh, _no_band_mask(tokens))
-                ]
-            )
-
-        return lsh_keys
-
+    #
     # hot path: packed-shingle signatures + vectorized band folds —
     # no md5, no string building; keys leave the UDF as int64
     @F.pandas_udf("array<long>")
@@ -254,9 +221,7 @@ def _lsh_keys_udf(cfg: BlockConfig):
         import numpy as np
 
         texts = [" ".join(t) for t in tokens]
-        sigs = minhash_fast_from_texts(
-            texts, n_hashes=cfg.lsh_hashes, seed=cfg.minhash_seed
-        )
+        sigs = minhash_fast_from_texts(texts, n_hashes=cfg.lsh_hashes)
         bh = band_hashes(sigs, cfg.lsh_bands, cfg.rows_per_band)
         if cfg.lsh2_bands:
             # second, longer-band family over the SAME signature (see
@@ -287,13 +252,14 @@ def _lsh_keys_udf(cfg: BlockConfig):
 def blocking_keys(doc_norm: DataFrame, cfg: BlockConfig) -> DataFrame:
     """(doc_id, key, fam) — one row per document per blocking key.
 
-    Key type: int64 (family-salted hashes — token/media keys via JVM
-    ``xxhash64('t'|'m', value)``, LSH band keys minted as int64 inside
-    the UDF). With ``cfg.debug_keys`` the human-readable string form
-    (``t:<token>``, ``l:b<i>:<digest>``, ``m:<media_ref>``) is kept
-    end-to-end for diagnostics. (doc_id, key) is unique by
-    construction: token/media keys are array_distinct per doc, band
-    keys carry their band lane, and families are salt/prefix-disjoint.
+    Key type: always int64, family-salted — token/media keys are JVM
+    ``xxhash64(family, value)`` (``'t'``/``'m'``), md5-family band
+    keys ``xxhash64('l', band_string)``, and fast-family band keys are
+    minted as int64 inside the UDF (a 64-bit collision, P ~ 1e-7 at
+    millions of keys, just adds one junk candidate pair that scoring
+    rejects). (doc_id, key) is unique by construction: token/media
+    keys are array_distinct per doc, band keys carry their band lane,
+    and families are salt/lane-disjoint.
 
     ``fam`` tags each key's family ("t"/"l"/"l2"/"m") so the pair
     expansion can apply per-family count ceilings
@@ -312,8 +278,6 @@ def blocking_keys(doc_norm: DataFrame, cfg: BlockConfig) -> DataFrame:
     doc_norm = doc_norm.repartition(spark.sparkContext.defaultParallelism)
 
     def _mk(family: str, value):
-        if cfg.debug_keys:
-            return F.concat(F.lit(f"{family}:"), value)
         return F.xxhash64(F.lit(family), value)
 
     parts = []
@@ -333,7 +297,7 @@ def blocking_keys(doc_norm: DataFrame, cfg: BlockConfig) -> DataFrame:
     if cfg.use_lsh_keys:
         if cfg.lsh_family == "md5_tokens":
             # the md5 family emits raw band strings; apply the family
-            # prefix/hash here like any other key family
+            # hash here like any other key family
             parts.append(
                 doc_norm.select(
                     "doc_id",
@@ -347,7 +311,7 @@ def blocking_keys(doc_norm: DataFrame, cfg: BlockConfig) -> DataFrame:
                 )
             )
         else:
-            # fast (and debug) families order keys family-first — the
+            # the fast family orders keys family-first — the
             # first lsh_bands positions are the short "l" bands, the
             # remainder the long "l2" bands — so the family tag falls
             # out of the key's POSITION, no extra payload from the UDF
@@ -435,7 +399,7 @@ def candidate_pairs(
             sketch_prefilter,
         )
 
-        sketch = sign_sketch(doc_norm, score_cfg)
+        sketch = sign_sketch(doc_norm)
     raw, key_metrics = expand_key_pairs(
         keys, cfg, persisted_out, sketch=sketch
     )
@@ -451,17 +415,17 @@ def expand_key_pairs(
     persisted_out: list | None = None,
     sketch: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(doc_id, key[, fam]) -> (raw canonical pairs, key_metrics).
+    """(doc_id, key, fam) -> (raw canonical pairs, key_metrics).
 
     The count-classified grouped expansion + salted-triangle core of
     :func:`candidate_pairs`, factored out so the cross-run incremental
     path (operators/incremental_er.py) can run the identical skew
     discipline over a restricted key table. Output pairs are
     canonical (doc_a < doc_b) but NOT deduplicated across keys —
-    callers dedup after any fused prefilter. A ``fam`` family-tag
-    column (emitted by :func:`blocking_keys`) selects per-family
-    count ceilings when ``cfg.family_ceilings`` is set; a bare
-    (doc_id, key) table gets the global ceiling.
+    callers dedup after any fused prefilter. ``keys`` has the
+    :func:`blocking_keys` schema: int64 ``key`` and its ``fam``
+    family tag, which selects the per-family count ceiling when
+    ``cfg.family_ceilings`` is set.
 
     ``sketch`` (optional): the (doc_id, sig:long, mo:boolean) per-doc
     table of score.sign_sketch. When given, members group as structs
@@ -474,12 +438,8 @@ def expand_key_pairs(
     cap = cfg.hot_key_cap
     skew_bound = cap * cfg.max_salts
     ceiling = min(skew_bound, cfg.max_key_docs)
-    # external callers may hand in a bare (doc_id, key) table; they
-    # get the global ceiling for every key
-    if "fam" not in keys.columns:
-        keys = keys.withColumn("fam", F.lit(None).cast("string"))
     # per-key ceiling: family-tag lookup (cfg.family_ceilings), every
-    # family bounded by the skew bound; untagged/unlisted -> global.
+    # family bounded by the skew bound; unlisted -> global.
     # A constant-vs-column comparison either way — free in codegen.
     if cfg.family_ceilings:
         ceil_col = F.coalesce(

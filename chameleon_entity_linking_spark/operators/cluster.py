@@ -53,7 +53,7 @@ def _spill_dir() -> str:
 # connected_components): 10M edges ~= 500MB of ids on the driver —
 # the same order as what a large broadcast join already ships through
 # the driver, and a ~3s vectorized contraction. The *effective* bound
-# is derived per session from spark.driver.memory (see
+# is derived per session from the driver JVM's max heap (see
 # ``_driver_contract_bound``): a caller on Spark's stock 1g driver
 # gets ~400k edges, not 10M — external callers never inherit a bound
 # this repo's 24g driver default was sized for.
@@ -75,29 +75,14 @@ _EDGES_PER_DRIVER_MB = 410
 _CONTRACT_PREPASS_MIN_EDGES = 1_500_000
 
 
-def _parse_jvm_mem_mb(mem: str) -> float:
-    """Parse a JVM memory string the way Spark does: optional k/m/g/t
-    suffix (with or without a trailing 'b'), and a PLAIN number means
-    MiB (Spark's byteStringAsMb default unit) — NOT bytes. Raises on
-    anything else (caller falls back)."""
-    mem = mem.strip().lower()
-    units = {"k": 1 / 1024, "m": 1.0, "g": 1024.0, "t": 1024.0 * 1024}
-    if mem.endswith("b") and len(mem) > 1 and mem[-2] in units:
-        mem = mem[:-1]  # "24gb" -> "24g"
-    if mem and mem[-1] in units:
-        return float(mem[:-1]) * units[mem[-1]]
-    return float(mem)  # suffix-less: MiB, matching Spark's reading
-
-
 def _driver_contract_bound(spark) -> int:
-    """Driver-memory-aware contraction bound: min(ceiling, ~400 edges
-    per MB of spark.driver.memory). Unparseable/unset memory falls
-    back to Spark's 1g default -> a conservative ~400k-edge bound."""
-    mem = str(spark.conf.get("spark.driver.memory", "1g"))
-    try:
-        mb = _parse_jvm_mem_mb(mem)
-    except (ValueError, IndexError):
-        mb = 1024.0
+    """Driver-memory-aware contraction bound: min(ceiling, ~410 edges
+    per MB of the driver JVM's actual max heap,
+    ``Runtime.maxMemory()``) — whatever set the heap (-Xmx, a conf,
+    a launcher default), this is the heap the contraction's collect
+    lands in."""
+    runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    mb = runtime.maxMemory() / (1024 * 1024)
     return min(DRIVER_FINISH_MAX_EDGES, int(mb * _EDGES_PER_DRIVER_MB))
 
 
@@ -298,8 +283,8 @@ def connected_components(
     vectorized driver contraction replaces the remaining rounds
     (identical output — both compute min-id components). The bound
     defaults to ``min(DRIVER_FINISH_MAX_EDGES, ~400 edges per MB of
-    spark.driver.memory)`` — the epilogue collects edge ids onto the
-    driver, so driver heap is the real constraint (a stock 1g driver
+    the driver JVM's max heap)`` — the epilogue collects edge ids onto
+    the driver, so driver heap is the real constraint (a stock 1g driver
     gets ~400k edges, this repo's 24g default the full 10M). Pass
     ``driver_finish_max_edges=0`` to force the fully distributed
     path, or an explicit edge count to override the derivation.

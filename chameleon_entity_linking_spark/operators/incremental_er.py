@@ -71,10 +71,10 @@ def incremental_candidate_pairs(
 ) -> DataFrame:
     """Candidate pairs between a new batch and the committed corpus.
 
-    ``committed_keys``: the committed run's (doc_id, key) blocking-key
-    table (commit it with the run, or rebuild it from the committed
-    doc_norm — keys are deterministic per doc). Returns canonical
-    deduplicated pairs where at least one endpoint is a new doc
+    ``committed_keys``: the committed run's (doc_id, key, fam)
+    blocking-key table (commit it with the run, or rebuild it from the
+    committed doc_norm — keys are deterministic per doc). Returns
+    canonical deduplicated pairs where at least one endpoint is a new doc
     (new-new and new-committed; committed-committed pairs are the
     committed run's business).
 
@@ -106,7 +106,7 @@ def incremental_candidate_pairs(
         and doc_norm_all is not None
         and score_cfg.sketch_fused
     ):
-        sketch = sign_sketch(doc_norm_all, score_cfg)
+        sketch = sign_sketch(doc_norm_all)
     raw, _metrics = expand_key_pairs(keys, cfg, persisted_out, sketch=sketch)
     # keep only pairs with >= 1 new endpoint. The new-doc id set is
     # the batch — small relative to the corpus — so both membership

@@ -45,7 +45,14 @@ NORM_COLUMNS = [
 ]
 
 
-def _embed_udf(dim: int = DEFAULT_DIM):
+# 64-bit SIGN sketch (bit i set iff component i < 0): the 8-byte
+# SimHash of the embedding. A >64-dim embedding cannot sign-pack into
+# one long (shiftleft wraps mod 64, which would silently alias sign
+# bits and corrupt hamming distances).
+assert DEFAULT_DIM <= 64
+
+
+def _embed_udf():
     # built lazily: pandas_udf parses its DDL against the active
     # session. Inputs are the JVM-prehashed token column (tokens_h:
     # xxhash64 per token, computed once in whole-stage codegen) plus
@@ -54,15 +61,13 @@ def _embed_udf(dim: int = DEFAULT_DIM):
     # functions/embed.encode_hashed_batch).
     @F.pandas_udf("array<float>")
     def embed(tokens_h: pd.Series, joined: pd.Series) -> pd.Series:
-        vecs = encode_hashed_batch(list(tokens_h), joined.tolist(), dim=dim)
+        vecs = encode_hashed_batch(list(tokens_h), joined.tolist())
         return pd.Series(list(vecs))
 
     return embed
 
 
-def normalize(
-    documents: DataFrame, dim: int = DEFAULT_DIM, repartition: bool = True
-) -> DataFrame:
+def normalize(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans) -> doc_norm with match features.
 
     Output columns:
@@ -74,13 +79,15 @@ def normalize(
       emb_q       array<tinyint> int8 quantization of ``embedding`` —
                   the compact sketch the scoring prefilter shuffles
                   instead of the full feature row (64B vs ~1KB/side)
+      emb_sig     long 64-bit sign sketch of ``embedding`` (bit i set
+                  iff component i < 0; zero vectors -> 0) — the
+                  scoring prefilter's phase-0 hamming sketch
     """
-    if repartition:
-        # a compact parquet input yields few read splits; the embed
-        # UDF cost is per-row CPU, so spread rows across all cores
-        # (one small shuffle buys full parallelism for the map stage)
-        spark = documents.sparkSession
-        documents = documents.repartition(spark.sparkContext.defaultParallelism)
+    # a compact parquet input yields few read splits; the embed UDF
+    # cost is per-row CPU, so spread rows across all cores (one small
+    # shuffle buys full parallelism for the map stage)
+    spark = documents.sparkSession
+    documents = documents.repartition(spark.sparkContext.defaultParallelism)
     text_spans = F.filter("spans", lambda s: s["kind"] == F.lit("text"))
     full_text = F.concat_ws(
         " ", F.transform(text_spans, lambda s: s["text"])
@@ -103,7 +110,7 @@ def normalize(
             )
         ).alias("media_refs"),
     )
-    out = (
+    return (
         base
         # hashed views of the set-valued features: pair scoring does
         # set intersections per CANDIDATE PAIR, and array_intersect on
@@ -119,7 +126,7 @@ def normalize(
         )
         .withColumn(
             "embedding",
-            _embed_udf(dim)(F.col("tokens_h"), F.array_join("tokens", " ")),
+            _embed_udf()(F.col("tokens_h"), F.array_join("tokens", " ")),
         )
         # int8 quantization: unit-norm components in [-1,1] -> [-127,127];
         # max cosine estimation error ~2/127 (used with a safety margin)
@@ -130,19 +137,11 @@ def normalize(
                 lambda x: F.round(x * 127).cast("byte"),
             ),
         )
-    )
-    if dim <= 64:
-        # 64-bit SIGN sketch (bit i set iff component i < 0): the
-        # 8-byte SimHash of the embedding. The scoring prefilter's
-        # first phase compares pairs with one XOR + popcount on this
-        # long — pure whole-stage-codegen integer ops, no array
-        # allocation per pair (see score.sketch_prefilter). Zero
-        # vectors -> 0. A >64-dim embedding cannot sign-pack into one
-        # long (shiftleft wraps mod 64, which would silently alias
-        # sign bits and corrupt hamming distances) — the column is
-        # simply omitted and sketch_prefilter falls back to its
-        # int8-dot-only phase.
-        out = out.withColumn(
+        # the scoring prefilter's first phase compares pairs with one
+        # XOR + popcount on this long — pure whole-stage-codegen
+        # integer ops, no array allocation per pair (see
+        # score.sketch_prefilter)
+        .withColumn(
             "emb_sig",
             F.expr(
                 "aggregate(zip_with(emb_q, sequence(0, size(emb_q) - 1),"
@@ -150,4 +149,4 @@ def normalize(
                 " 0L, (a, b) -> a + b)"
             ),
         )
-    return out
+    )

@@ -22,9 +22,9 @@ three-phase cascade, each phase shuffling less data than it rules out:
    the later phases -> dropped. Measured effect: the wide-feature
    shuffle shrinks from ~30GB to ~2GB at 18M pairs.
 2. **Exact cheap components (JVM, survivors only).** Full features
-   join the (small) survivor set; token/media Jaccard + exact float
-   dot (cosine: encoder vectors are unit-norm or zero) re-check the
-   prefilter exactly and apply the *lossless* upper bound
+   join the (small) survivor set; token/media Jaccard + the int8
+   cosine the prefilter already computed apply the *lossless* upper
+   bound
    ``upper = w_text*(w_jw + w_lev + w_tok*s_tok + w_cos*s_cos)
    [+ w_media*s_media]`` — a pair with ``upper < threshold`` cannot
    clear the final threshold whatever JW/Levenshtein say.
@@ -48,6 +48,12 @@ from chameleon_entity_linking_spark.functions.strsim import (
 )
 
 
+# cap on name-span chars entering the O(n^2) string kernels — bounds
+# per-pair cost (the truncation analogue of the reference's
+# max_length=512 tokenizer cap, BiEncoder/model.py:46-47)
+MAX_NAME_CHARS = 100
+
+
 class ScoreConfig:
     def __init__(
         self,
@@ -62,11 +68,6 @@ class ScoreConfig:
         # utils/entity_extractor.py:10): transitive closure recovers
         # borderline true pairs, so a precision-leaning cut wins
         threshold: float = 0.62,
-        # cap on name-span chars entering the O(n^2) string kernels —
-        # bounds per-pair cost (the truncation analogue of the
-        # reference's max_length=512 tokenizer cap,
-        # BiEncoder/model.py:46-47)
-        max_name_chars: int = 100,
         # lossless-cascade switch (off only for diagnostics: scores of
         # pruned pairs are never needed — they cannot clear threshold)
         cascade: bool = True,
@@ -102,7 +103,6 @@ class ScoreConfig:
         self.w_text = w_text
         self.w_media = w_media
         self.threshold = threshold
-        self.max_name_chars = max_name_chars
         self.cascade = cascade
         self.prefilter_min_cheap = prefilter_min_cheap
         self.prefilter_max_hamming = prefilter_max_hamming
@@ -148,16 +148,14 @@ def _features(doc_norm: DataFrame, side: str) -> DataFrame:
     )
 
 
-def _name_features(
-    doc_norm: DataFrame, side: str, max_name_chars: int
-) -> DataFrame:
+def _name_features(doc_norm: DataFrame, side: str) -> DataFrame:
     """(doc_{side}, name_{side}) only — joined to cheap-phase
     SURVIVORS, so the 100-char names never ride the full pair stream
     (r6, guide §2.3: the cheap phase decides on set/sketch features
     alone; measured at sf1.0 the names were ~40% of the bytes flowing
     through the 22.5M-pair cheap projection). Names truncate here,
-    before the join: the string kernels cap at max_name_chars anyway."""
-    name = F.substring(F.col("name_text"), 1, max_name_chars)
+    before the join: the string kernels cap at MAX_NAME_CHARS anyway."""
+    name = F.substring(F.col("name_text"), 1, MAX_NAME_CHARS)
     return doc_norm.select(
         F.col("doc_id").alias(f"doc_{side}"), name.alias(f"name_{side}")
     )
@@ -231,28 +229,14 @@ def _mediaonly():
     return (F.size("media_refs") > 0) & (F.size("tokens") == 0)
 
 
-def _hamming_cut(doc_norm: DataFrame, cfg: ScoreConfig) -> int | None:
-    """The phase-0 hamming cut, or None when it does not apply (no
-    cut configured, or no ``emb_sig``: normalize() omits it past 64
-    dims)."""
-    if cfg.prefilter_max_hamming is None or "emb_sig" not in doc_norm.columns:
-        return None
-    return int(cfg.prefilter_max_hamming)
-
-
-def sign_sketch(doc_norm: DataFrame, cfg: ScoreConfig) -> DataFrame:
+def sign_sketch(doc_norm: DataFrame) -> DataFrame:
     """(doc_id, sig, mo): the per-doc phase-0 sketch — the 64-bit
-    embedding sign sketch (null when the hamming cut does not apply)
-    and the media-only flag, broadcast-hinted. Pair generation joins it
-    onto the key table (block.expand_key_pairs ``sketch=``), so the raw
-    pair stream is born carrying both sides' sketches."""
-    sig = (
-        F.col("emb_sig")
-        if _hamming_cut(doc_norm, cfg) is not None
-        else F.lit(None).cast("long")
-    )
+    embedding sign sketch ``emb_sig`` and the media-only flag,
+    broadcast-hinted. Pair generation joins it onto the key table
+    (block.expand_key_pairs ``sketch=``), so the raw pair stream is
+    born carrying both sides' sketches."""
     sketch = doc_norm.select(
-        "doc_id", sig.alias("sig"), _mediaonly().alias("mo")
+        "doc_id", F.col("emb_sig").alias("sig"), _mediaonly().alias("mo")
     )
     # with the emb_q tables ~70B/doc: broadcastable to ~10^8 docs
     return F.broadcast(sketch)
@@ -277,7 +261,6 @@ def sketch_prefilter(
     per side first.
 
     Phase 1 (int8 dot, survivors only): the exact int8-dot cosine.
-    Scoring re-applies this same cut bit-exactly downstream.
 
     Output carries ``s_cos`` (the int8-dot cosine): the dot is the
     most expensive cheap-phase expression, so downstream scoring
@@ -286,7 +269,7 @@ def sketch_prefilter(
     if cfg.prefilter_min_cheap is None or not cfg.cascade:
         return pairs
     if "mediaonly_a" not in pairs.columns:
-        sketch = sign_sketch(doc_norm, cfg)
+        sketch = sign_sketch(doc_norm)
         for side in "ab":
             pairs = pairs.join(
                 sketch.select(
@@ -300,10 +283,11 @@ def sketch_prefilter(
     # text-free media doc is exempt from the lexical cuts (its match
     # signal is media overlap alone)
     mediaonly = F.col("mediaonly_a") | F.col("mediaonly_b")
-    cut = _hamming_cut(doc_norm, cfg)
-    if cut is not None:
+    if cfg.prefilter_max_hamming is not None:
         ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-        pairs = pairs.where(mediaonly | (ham <= F.lit(cut)))
+        pairs = pairs.where(
+            mediaonly | (ham <= F.lit(int(cfg.prefilter_max_hamming)))
+        )
     # broadcast: planner size estimates come from the FULL doc_norm
     # parquet, so unhinted the much larger pair side gets shuffled
     # instead (measured: +30s at 193k docs)
@@ -358,7 +342,7 @@ def score_pairs(
     if has_cos:
         fa, fb = fa.drop("q_a"), fb.drop("q_b")
     joined = pairs.join(fa, "doc_a").join(fb, "doc_b")
-    # ---- cheap JVM components, each evaluated ONCE (_pin) ---------------
+    # ---- cheap JVM components, each evaluated ONCE (_eval_once) ---------
     # encoder vectors are unit-norm or zero => cosine == dot, and the
     # zero-vector case degrades to 0.0 on its own. Sizes/flags are
     # projected out too so the arrays can be dropped here. Names are
@@ -422,17 +406,10 @@ def score_pairs(
             .otherwise(cheap_text_max)
         )
         cheap = cheap.where(upper >= cfg.threshold)
-        if cfg.prefilter_min_cheap is not None:
-            mediaonly = (F.col("has_med_a") & F.col("no_tok_a")) | (
-                F.col("has_med_b") & F.col("no_tok_b")
-            )
-            cheap = cheap.where(
-                (F.col("s_cos") >= cfg.prefilter_min_cheap) | mediaonly
-            )
     # names join the survivors only (truncated pre-join as before)
-    cheap = cheap.join(
-        _name_features(doc_norm, "a", cfg.max_name_chars), "doc_a"
-    ).join(_name_features(doc_norm, "b", cfg.max_name_chars), "doc_b")
+    cheap = cheap.join(_name_features(doc_norm, "a"), "doc_a").join(
+        _name_features(doc_norm, "b"), "doc_b"
+    )
     # ---- expensive Python components on survivors only -----------------
     # names were truncated JVM-side above, bounding the quadratic
     # kernels AND the Arrow transfer; explicit repartition because AQE

@@ -55,28 +55,8 @@ def _fp(obj: Any) -> str:
     return hashlib.md5(json.dumps(obj, sort_keys=True).encode()).hexdigest()[:16]
 
 
-# BlockConfig fields that change WHICH keys a document emits (the
-# committed blocking_keys table's identity). Cap/ceiling/salting knobs
-# deliberately excluded: they shape the pair EXPANSION, not the keys,
-# so retuning them resumes from the committed key table instead of
-# re-deriving it (the whole point of committing keys at 10^12 docs).
-_KEY_FIELDS = (
-    "lsh_hashes",
-    "lsh_bands",
-    "rows_per_band",
-    "minhash_seed",
-    "use_token_keys",
-    "use_lsh_keys",
-    "use_media_keys",
-    "lsh_family",
-    "lsh2_bands",
-    "debug_keys",
-)
-
-
 def _key_fp(block_cfg: BlockConfig, norm_fp: str) -> str:
-    cfg = block_cfg.fingerprint()
-    return _fp({"keys": {k: cfg[k] for k in _KEY_FIELDS}, "in": norm_fp})
+    return _fp({"keys": block_cfg.key_fingerprint(), "in": norm_fp})
 
 
 class Pipeline:
@@ -160,7 +140,8 @@ class Pipeline:
         # blocking keys are a first-class committed snapshot: the
         # incremental path (Pipeline.incremental) PROBES this table
         # instead of re-deriving keys for the committed corpus, and a
-        # cap/ceiling retune resumes from it (see _KEY_FIELDS)
+        # cap/ceiling retune resumes from it (see
+        # BlockConfig.key_fingerprint)
         keys_fp = _key_fp(self.block_cfg, norm_fp)
         keys_df = self._run_stage(
             "block_keys",

@@ -49,6 +49,20 @@ _DRIVER_MEM_SHARE = 0.4
 _DRIVER_MEM_MAX_MB = 24 * 1024
 
 
+def _parse_jvm_mem_mb(mem: str) -> float:
+    """Parse a JVM memory string the way Spark does: optional k/m/g/t
+    suffix (with or without a trailing 'b'), and a PLAIN number means
+    MiB (Spark's byteStringAsMb default unit) — NOT bytes. Raises
+    ValueError on anything else."""
+    mem = mem.strip().lower()
+    units = {"k": 1 / 1024, "m": 1.0, "g": 1024.0, "t": 1024.0 * 1024}
+    if mem.endswith("b") and len(mem) > 1 and mem[-2] in units:
+        mem = mem[:-1]  # "24gb" -> "24g"
+    if mem and mem[-1] in units:
+        return float(mem[:-1]) * units[mem[-1]]
+    return float(mem)  # suffix-less: MiB, matching Spark's reading
+
+
 def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` default: min(24g, 40% of MemTotal).
     Without a readable ``meminfo`` (non-Linux hosts) it is 24g."""
@@ -85,10 +99,6 @@ def get_spark(
     inter-executor shuffle path, unlike ``local[N]``'s one shared JVM.
     """
     if executors is not None:
-        from chameleon_entity_linking_spark.operators.cluster import (
-            _parse_jvm_mem_mb,
-        )
-
         cores = executors * executor_cores
         # Spark-conformant parsing ("4096m", "2G", plain MiB, ...) —
         # a bare rstrip('g') crashed on every non-lowercase-gigabyte

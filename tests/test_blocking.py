@@ -24,6 +24,15 @@ _DOCS_SCHEMA = (
 )
 
 
+def _family_keys(spark, fam_values):
+    """{(fam, xxhash64(fam, value))} — the int64 blocking keys of the
+    given (family, value) pairs, computed by the JVM hash itself."""
+    row = spark.range(1).select(
+        *[F.xxhash64(F.lit(f), F.lit(v)) for f, v in fam_values]
+    ).first()
+    return {(f, k) for (f, _v), k in zip(fam_values, row)}
+
+
 def _docs(spark, rows):
     """rows: list of (doc_id, text, media_refs)."""
     data = [
@@ -138,15 +147,16 @@ def _assert_fused_equals_plain(dn, cfg, scfg):
 class TestBlockingKeys:
     def test_key_families(self, spark):
         docs = _docs(spark, [("d1", "Acme Corp", ["mAAA"])])
-        norm = normalize(docs)
-        cfg = BlockConfig(debug_keys=True)
-        keys = {r.key for r in blocking_keys(norm, cfg).collect()}
-        assert "t:acme" in keys and "t:corp" in keys
-        assert "m:mAAA" in keys
-        assert sum(k.startswith("l:") for k in keys) == 16
+        rows = blocking_keys(normalize(docs), BlockConfig()).collect()
+        got = {(r.fam, r.key) for r in rows}
+        want = _family_keys(
+            spark, [("t", "acme"), ("t", "corp"), ("m", "mAAA")]
+        )
+        assert want <= got
+        assert sum(r.fam == "l" for r in rows) == 16
 
     def test_hashed_keys_are_int64_and_family_disjoint(self, spark):
-        # default (non-debug) keys are int64 — compact shuffle rows;
+        # keys are int64 — compact shuffle rows;
         # the same doc must still emit all three families
         docs = _docs(spark, [("d1", "Acme Corp", ["mAAA"])])
         df = blocking_keys(normalize(docs), BlockConfig())
@@ -168,13 +178,11 @@ class TestBlockingKeys:
             [("d1", [{"kind": "image", "text": "", "media_ref": "mX", "offset": 0}])],
             "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
         )
-        keys = {
-            r.key
-            for r in blocking_keys(
-                normalize(docs), BlockConfig(debug_keys=True)
-            ).collect()
+        got = {
+            (r.fam, r.key)
+            for r in blocking_keys(normalize(docs), BlockConfig()).collect()
         }
-        assert "m:mX" in keys
+        assert _family_keys(spark, [("m", "mX")]) <= got
 
 
 class TestCandidatePairs:
@@ -300,14 +308,14 @@ class TestCandidatePairs:
             lsh_family="md5_tokens",
             lsh_hashes=8,
             lsh_bands=4,
-            debug_keys=True,
         )
-        keys = sorted(r.key for r in blocking_keys(normalize(docs), cfg).collect())
+        rows = blocking_keys(normalize(docs), cfg).collect()
         mh = minhash_md5(["alpha", "beta", "gamma"], n_hashes=8)
-        want = sorted(
-            f"l:b{i}:{mh[2 * i]}{mh[2 * i + 1]}" for i in range(4)
+        want = _family_keys(
+            spark, [("l", f"b{i}:{mh[2 * i]}{mh[2 * i + 1]}") for i in range(4)]
         )
-        assert keys == want
+        assert {(r.fam, r.key) for r in rows} == want
+        assert len(rows) == 4
 
     def test_lsh_blocks_near_duplicates_without_shared_name_tokens(self, spark):
         text_a = "the quick brown fox jumps over the lazy dog tonight"

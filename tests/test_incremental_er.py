@@ -47,7 +47,7 @@ def _docs(spark, rows):
     )
 
 
-BLOCK_CFG = BlockConfig(debug_keys=True)
+BLOCK_CFG = BlockConfig()
 SCORE_CFG = ScoreConfig(threshold=0.8, prefilter_min_cheap=None)
 
 BATCH1 = [
@@ -66,7 +66,7 @@ BATCH2 = [
 
 def _full_run(spark, rows):
     docs = _docs(spark, rows)
-    norm = normalize(docs, repartition=False)
+    norm = normalize(docs)
     pairs, _ = candidate_pairs(norm, BLOCK_CFG, score_cfg=SCORE_CFG)
     edges = edges_above_threshold(
         score_pairs(pairs, norm, SCORE_CFG), SCORE_CFG
@@ -76,7 +76,7 @@ def _full_run(spark, rows):
 
 def _incremental_run(spark):
     docs1 = _docs(spark, BATCH1)
-    norm1 = normalize(docs1, repartition=False)
+    norm1 = normalize(docs1)
     pairs1, _ = candidate_pairs(norm1, BLOCK_CFG, score_cfg=SCORE_CFG)
     edges1 = edges_above_threshold(
         score_pairs(pairs1, norm1, SCORE_CFG), SCORE_CFG
@@ -130,8 +130,8 @@ class TestIncrementalER:
         lone = _docs(spark, [("z9", "zzz yyy xxx www", "")])
         new_edges, merged = incremental_er_update(
             lone,
-            normalize(docs1, repartition=False),
-            blocking_keys(normalize(docs1, repartition=False), BLOCK_CFG),
+            normalize(docs1),
+            blocking_keys(normalize(docs1), BLOCK_CFG),
             assign1,
             BLOCK_CFG,
             SCORE_CFG,
@@ -173,7 +173,7 @@ class TestIncrementalER:
 
         catalog = ParquetCatalog(str(tmp_path / "wh"))
         docs1 = _docs(spark, BATCH1)
-        norm1 = normalize(docs1, repartition=False)
+        norm1 = normalize(docs1)
         pairs1, _ = candidate_pairs(norm1, BLOCK_CFG, score_cfg=SCORE_CFG)
         edges1 = edges_above_threshold(
             score_pairs(pairs1, norm1, SCORE_CFG), SCORE_CFG
@@ -224,14 +224,14 @@ class TestIncrementalDrift:
     incremental path (media keys give exact control over counts)."""
 
     # cap 2, max_salts 2 -> skew bound 4; ceiling = min(4, 4) = 4
-    CFG = BlockConfig(hot_key_cap=2, max_salts=2, max_key_docs=4, debug_keys=True)
+    CFG = BlockConfig(hot_key_cap=2, max_salts=2, max_key_docs=4)
     # media-only docs: match is judged purely on media jaccard, so two
     # docs sharing their single media ref score 1.0
     SC = ScoreConfig(threshold=0.8, prefilter_min_cheap=None)
 
     def _commit(self, spark, rows):
         docs = _docs(spark, rows)
-        norm = normalize(docs, repartition=False)
+        norm = normalize(docs)
         pairs, _ = candidate_pairs(norm, self.CFG, score_cfg=self.SC)
         edges = edges_above_threshold(
             score_pairs(pairs, norm, self.SC), self.SC
@@ -447,7 +447,7 @@ class TestDriverContractBound:
         bytes) and accepts one- or two-letter k/m/g/t[b] suffixes —
         the bound derivation must agree, or a '4096' (4 GiB) driver
         silently gets a ~1-edge bound (ADVICE r4)."""
-        from chameleon_entity_linking_spark.operators.cluster import (
+        from chameleon_entity_linking_spark.plans.session import (
             _parse_jvm_mem_mb,
         )
 

@@ -94,8 +94,11 @@ class TestLsh2Family:
         )
 
         keys = spark.createDataFrame(
-            [("a", 1), ("b", 1), ("c", 1), ("a", 2), ("b", 2), ("c", 2)],
-            "doc_id string, key long",
+            [
+                ("a", 1, "l"), ("b", 1, "l"), ("c", 1, "l"),
+                ("a", 2, "l2"), ("b", 2, "l2"), ("c", 2, "l2"),
+            ],
+            "doc_id string, key long, fam string",
         )
         raw, _ = expand_key_pairs(keys, BlockConfig())
         got = sorted(map(tuple, raw.distinct().collect()))

@@ -183,3 +183,29 @@ class TestPrefilterRetuneInvalidatesPairs:
         assert (
             p2.catalog.current_snapshot("pairs").snapshot_id != sid_before
         ), "hamming retune must rebuild the pairs snapshot"
+
+
+class TestKeyFingerprint:
+    def test_cap_retune_reuses_keys_lsh_retune_rebuilds_them(
+        self, spark, tmp_path
+    ):
+        """The committed key table's identity is
+        BlockConfig.key_fingerprint(): an expansion knob (hot_key_cap)
+        resumes from the committed keys and rebuilds only the pairs; a
+        key-shaping knob (lsh_bands) rebuilds the keys."""
+        from chameleon_entity_linking_spark.operators.block import BlockConfig
+
+        wh = str(tmp_path / "wh")
+        cfg = SynthConfig(n_entities=40, seed=7)
+        Pipeline(spark, wh, synth_cfg=cfg).run(evaluate=False)
+        p2 = Pipeline(
+            spark, wh, synth_cfg=cfg, block_cfg=BlockConfig(hot_key_cap=32)
+        )
+        p2.run(evaluate=False)
+        assert p2.timings["block_keys"] == 0.0  # keys resumed
+        assert p2.timings["block"] > 0.0  # pairs recomputed
+        p3 = Pipeline(
+            spark, wh, synth_cfg=cfg, block_cfg=BlockConfig(lsh_bands=8)
+        )
+        p3.run(evaluate=False)
+        assert p3.timings["block_keys"] > 0.0  # keys rebuilt

@@ -1,7 +1,9 @@
 """Session defaults: the driver heap is sized from the host."""
 
-from chameleon_entity_linking_spark.operators.cluster import _parse_jvm_mem_mb
-from chameleon_entity_linking_spark.plans.session import default_driver_mem
+from chameleon_entity_linking_spark.plans.session import (
+    _parse_jvm_mem_mb,
+    default_driver_mem,
+)
 
 
 def _meminfo(tmp_path, total_kb):
@@ -31,3 +33,19 @@ def test_default_driver_mem_share_and_cap(tmp_path):
 
 def test_default_driver_mem_without_meminfo(tmp_path):
     assert default_driver_mem(str(tmp_path / "absent")) == "24g"
+
+
+def test_driver_contract_bound_within_configured_heap(spark):
+    # the bound is derived from the driver JVM's max heap, which never
+    # exceeds the configured -Xmx (spark.driver.memory) by more than
+    # the heap's alignment: G1 rounds it up to whole regions of at
+    # most 32 MB (e.g. -Xmx6437m -> maxMemory 6440 MB)
+    from chameleon_entity_linking_spark.operators.cluster import (
+        DRIVER_FINISH_MAX_EDGES,
+        _driver_contract_bound,
+    )
+
+    bound = _driver_contract_bound(spark)
+    assert 0 < bound <= DRIVER_FINISH_MAX_EDGES
+    conf_mb = _parse_jvm_mem_mb(spark.conf.get("spark.driver.memory"))
+    assert bound <= 410 * (conf_mb + 32)
