@@ -7,15 +7,16 @@ A global index cannot be built at 10^12 docs; banded LSH keys turn
 similarity search into a hash-partitioned self-join that Spark
 shuffles like any other join.
 
-Two interchangeable hash families:
+One signature family per purpose:
 
+- ``minhash_fast_from_texts`` + ``band_hashes``: the pipeline family
+  (block.blocking_keys' LSH UDF). Char-3 shingles pack losslessly into
+  one uint64, each shingle's base hash is ``splitmix64`` of its pack,
+  and the 64 hash functions are ``splitmix64(base ^ c_i)`` — wrapping
+  uint64 numpy end to end, no md5 and no string building anywhere.
 - ``minhash_md5``: per-seed min over ``md5(f"{seed}:{shingle}")`` hex
   prefixes. Slower, but *exactly* reproducible in DuckDB SQL
-  (``substr(md5(...),1,16)`` + ``min``) — used by the oracle-checked
-  queries.
-- ``minhash_fast``: one md5 per shingle, then 64 splitmix64-mixed
-  variants (``splitmix64(x ^ c_i)``) — wrapping uint64 numpy ops,
-  fully vectorized; the hot path for the pipeline/bench.
+  (``substr(md5(...),1,16)`` + ``min``) — the oracle-parity family.
 
 Both are deterministic across processes (no PYTHONHASHSEED exposure).
 """
@@ -45,16 +46,11 @@ def _splitmix64(z: np.ndarray) -> np.ndarray:
     return z ^ (z >> _U64(31))
 
 
-def shingle_base_hash(shingle: str) -> int:
-    """64-bit base hash: first 8 bytes of md5, big-endian."""
-    return int.from_bytes(hashlib.md5(shingle.encode()).digest()[:8], "big")
-
-
 def minhash_md5(shingles: list[str], n_hashes: int = 16) -> list[str]:
     """Per-seed min of 16-hex-char md5 prefixes (oracle-parity family).
 
     Returns fixed-width lowercase hex strings, so lexicographic min ==
-    numeric min — lettings the DuckDB oracle use plain ``min()``.
+    numeric min — letting the DuckDB oracle use plain ``min()``.
     Empty shingle set -> all ``"f"*16`` sentinels.
     """
     if not shingles:
@@ -70,48 +66,8 @@ def minhash_md5(shingles: list[str], n_hashes: int = 16) -> list[str]:
     return out
 
 
-def minhash_fast_batch(
-    shingle_lists: list[list[str]], n_hashes: int = 64, seed: int = 42
-) -> np.ndarray:
-    """(n_docs, n_hashes) signature matrix.
-
-    One md5 per shingle (C-speed), then ``splitmix64(x ^ c_i)`` per
-    hash function — a (n_shingles, n_hashes) wrapping-uint64 matrix
-    min-reduced along shingles. Empty shingle set -> all-max sentinel.
-    Returned as int64 (same bits) so Spark's LongType can carry it.
-    """
-    consts = _seed_constants(n_hashes, seed)
-    out = np.full((len(shingle_lists), n_hashes), np.iinfo(np.uint64).max, dtype=_U64)
-    with np.errstate(over="ignore"):
-        for row, shingles in enumerate(shingle_lists):
-            if not shingles:
-                continue
-            x = np.fromiter(
-                (shingle_base_hash(s) for s in shingles),
-                dtype=_U64,
-                count=len(shingles),
-            )
-            out[row] = _splitmix64(x[:, None] ^ consts[None, :]).min(axis=0)
-    return out.view(np.int64)
-
-
-def band_keys_from_signature(
-    sig: list, n_bands: int, rows_per_band: int
-) -> list[str]:
-    """LSH band keys: ``b{i}:{md5(joined band values)[:16]}``."""
-    keys = []
-    for i in range(n_bands):
-        band = sig[i * rows_per_band : (i + 1) * rows_per_band]
-        digest = hashlib.md5(
-            ("|".join(str(v) for v in band)).encode()
-        ).hexdigest()[:16]
-        keys.append(f"b{i}:{digest}")
-    return keys
-
-
 # ---------------------------------------------------------------------------
-# fully-vectorized pipeline hot path: no per-shingle md5, no per-band
-# string building — char-3 shingles pack losslessly into one uint64
+# pipeline family: char-3 shingles pack losslessly into one uint64
 # (3 codepoints x 21 bits), so the base hash is splitmix64 of the pack
 # and the whole signature matrix is wrapping-uint64 numpy end-to-end.
 # ---------------------------------------------------------------------------
@@ -141,8 +97,8 @@ def pack_char3_windows(text: str) -> np.ndarray:
 
 
 def _pack_shingles(text: str) -> np.ndarray:
-    """Distinct char-3 shingles (SET semantics, matching
-    ``char_shingles``) — the deduplicated view of
+    """Distinct char-3 shingles (SET semantics: a repeated window
+    counts once in a MinHash) — the deduplicated view of
     :func:`pack_char3_windows`."""
     return np.unique(pack_char3_windows(text))
 
@@ -179,17 +135,9 @@ def band_hashes(
     never share keys (the vector analogue of the ``b{i}:`` prefix).
     ``lane_offset`` shifts the band indices so a SECOND band family
     over the same signature (different rows_per_band) cannot collide
-    with the first one's lanes.
-
-    Accepts signatures in either width-64 dtype: ``minhash_fast_batch``
-    returns int64 views (so a Spark LongType column can carry them)
-    while ``minhash_fast_from_texts`` returns raw uint64 — the int64
-    form is re-viewed here (bit-identical), since uint64 ^ int64 is
-    unsupported in numpy and would raise.
+    with the first one's lanes. ``sigs`` is the uint64 matrix of
+    :func:`minhash_fast_from_texts`.
     """
-    sigs = np.asarray(sigs)
-    if sigs.dtype == np.int64:
-        sigs = sigs.view(np.uint64)
     n_docs = sigs.shape[0]
     bands = sigs.reshape(n_docs, n_bands, rows_per_band)
     with np.errstate(over="ignore"):

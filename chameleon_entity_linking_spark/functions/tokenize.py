@@ -26,15 +26,3 @@ def tokens_col(text: Column) -> Column:
         F.split(F.lower(text), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
     )
 
-
-def char_shingles(tokens: list[str], k: int = 3) -> list[str]:
-    """Distinct character k-shingles over the space-joined token text.
-
-    The MinHash input unit: shingling the normalized text makes the
-    signature robust to token-level typos (the analogue of the
-    reference's dense-embedding recall, `BiEncoder/test_retrieval.py`).
-    """
-    s = " ".join(tokens)
-    if len(s) < k:
-        return [s] if s else []
-    return sorted({s[i : i + k] for i in range(len(s) - k + 1)})

@@ -356,14 +356,16 @@ def candidate_pairs(
 
     Returns (pairs(doc_a, doc_b), key_metrics(key, fam, n_docs, class)).
 
-    With ``score_cfg`` (a ScoreConfig with cascade + prefilter), the
-    scoring stage's sketch prefilter runs on the RAW pair stream —
-    the sign sketch rides the key table into the expansion, so the
-    hamming cut runs in the expansion stage — BEFORE the pair dedup
-    shuffle. Measured at 193k docs: ~89% of raw candidates die at the
-    sketch, so the dedup shuffle and the pairs snapshot shrink ~9x.
-    The pairs then carry ``s_cos`` and scoring skips the prefilter.
-    Final edges are identical with or without fusion.
+    The sign sketch always rides the key table into the expansion.
+    With ``score_cfg.sketch_fused`` (a ScoreConfig with cascade +
+    prefilter), the scoring stage's sketch prefilter runs on that RAW
+    pair stream — the hamming cut runs in the expansion stage — BEFORE
+    the pair dedup shuffle. Measured at 193k docs: ~89% of raw
+    candidates die at the sketch, so the dedup shuffle and the pairs
+    snapshot shrink ~9x. The pairs then carry ``s_cos`` and scoring
+    skips the prefilter. Unfused, the sketch columns are projected
+    away before the dedup and score_pairs prefilters instead. Final
+    edges are identical with or without fusion.
 
     Intermediates are ``persist()``-ed (multiple passes consume them).
     Pass ``persisted_out`` (a list) to receive the cached DataFrames
@@ -392,19 +394,18 @@ def candidate_pairs(
     # sides' sketches and the hamming cut fuses into the explode stage
     # itself — no joins over the tens-of-millions raw pair stream
     # (measured at sf1.0: 67M raw pairs from 1.5M key rows).
-    sketch = None
-    if score_cfg is not None and score_cfg.sketch_fused:
-        from chameleon_entity_linking_spark.operators.score import (
-            sign_sketch,
-            sketch_prefilter,
-        )
-
-        sketch = sign_sketch(doc_norm)
-    raw, key_metrics = expand_key_pairs(
-        keys, cfg, persisted_out, sketch=sketch
+    from chameleon_entity_linking_spark.operators.score import (
+        sign_sketch,
+        sketch_prefilter,
     )
-    if sketch is not None:
+
+    raw, key_metrics = expand_key_pairs(
+        keys, cfg, persisted_out, sketch=sign_sketch(doc_norm)
+    )
+    if score_cfg is not None and score_cfg.sketch_fused:
         raw = sketch_prefilter(raw, doc_norm, score_cfg)
+    else:
+        raw = raw.select("doc_a", "doc_b")
     pairs = raw.dropDuplicates(["doc_a", "doc_b"])
     return pairs, key_metrics
 
@@ -413,7 +414,8 @@ def expand_key_pairs(
     keys: DataFrame,
     cfg: BlockConfig,
     persisted_out: list | None = None,
-    sketch: DataFrame | None = None,
+    *,
+    sketch: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_id, key, fam) -> (raw canonical pairs, key_metrics).
 
@@ -427,12 +429,12 @@ def expand_key_pairs(
     family tag, which selects the per-family count ceiling when
     ``cfg.family_ceilings`` is set.
 
-    ``sketch`` (optional): the (doc_id, sig:long, mo:boolean) per-doc
-    table of score.sign_sketch. When given, members group as structs
-    carrying the sketch and the output pairs additionally carry
-    (sig_a, sig_b, mediaonly_a, mediaonly_b), so
+    ``sketch``: the (doc_id, sig:long, mo:boolean) per-doc table of
+    score.sign_sketch, covering every doc in ``keys``. Members group
+    as (doc_id, sig, mo) structs, so the output pairs carry
+    (doc_a, doc_b, sig_a, sig_b, mediaonly_a, mediaonly_b) and
     score.sketch_prefilter's phase-0 hamming cut runs inline in the
-    expansion stage. Pair SET is identical either way.
+    expansion stage.
     """
     spark = keys.sparkSession
     cap = cfg.hot_key_cap
@@ -504,15 +506,13 @@ def expand_key_pairs(
     # (cross-key pair dedup happens downstream anyway), this just
     # stops computing it in multiplicate. The shuffle is of the
     # SMALL grouped table (rows bounded by the ceiling).
-    # member column: plain doc_id, or a (doc_id, sig, mo) struct when
-    # the inline sketch rides the expansion. array_sort on the struct
-    # orders by doc_id first (sig/mo are FUNCTIONS of doc_id), so both
-    # member-array forms sort and bucket-dedup identically.
-    member_keys = keys.select("doc_id", "key")
-    if sketch is not None:
-        member_keys = member_keys.join(sketch, "doc_id").select(
-            F.struct("doc_id", "sig", "mo").alias("doc_id"), "key"
-        )
+    # member column: a (doc_id, sig, mo) struct, so the sketch rides
+    # the expansion. array_sort on the struct orders by doc_id first
+    # (sig/mo are FUNCTIONS of doc_id), so the member arrays sort and
+    # bucket-dedup exactly as bare doc_ids would.
+    member_keys = keys.select("doc_id", "key").join(sketch, "doc_id").select(
+        F.struct("doc_id", "sig", "mo").alias("doc_id"), "key"
+    )
     grouped = (
         member_keys
         .join(
@@ -531,39 +531,19 @@ def expand_key_pairs(
     if persisted_out is not None:
         persisted_out.append(grouped)
 
-    if sketch is None:
-        def _canonical(da, db):
-            return [
-                F.least(da, db).alias("doc_a"),
-                F.greatest(da, db).alias("doc_b"),
-            ]
-
-        def _lt(da, db):
-            return da < db
-
-        def _ne(da, db):
-            return da != db
-
-    else:
-        # canonicalize on the ids; each side's sketch follows its doc
-        def _canonical(da, db):
-            a_first = da["doc_id"] < db["doc_id"]
-            lo = F.when(a_first, da).otherwise(db)
-            hi = F.when(a_first, db).otherwise(da)
-            return [
-                lo["doc_id"].alias("doc_a"),
-                hi["doc_id"].alias("doc_b"),
-                lo["sig"].alias("sig_a"),
-                hi["sig"].alias("sig_b"),
-                lo["mo"].alias("mediaonly_a"),
-                hi["mo"].alias("mediaonly_b"),
-            ]
-
-        def _lt(da, db):
-            return da["doc_id"] < db["doc_id"]
-
-        def _ne(da, db):
-            return da["doc_id"] != db["doc_id"]
+    # canonicalize on the ids; each side's sketch follows its doc
+    def _canonical(da, db):
+        a_first = da["doc_id"] < db["doc_id"]
+        lo = F.when(a_first, da).otherwise(db)
+        hi = F.when(a_first, db).otherwise(da)
+        return [
+            lo["doc_id"].alias("doc_a"),
+            hi["doc_id"].alias("doc_b"),
+            lo["sig"].alias("sig_a"),
+            hi["sig"].alias("sig_b"),
+            lo["mo"].alias("mediaonly_a"),
+            hi["mo"].alias("mediaonly_b"),
+        ]
 
     # -- normal keys: bounded JVM-side pair expansion, no self-join -------
     small = grouped.where(F.col("n_docs") <= cap)
@@ -580,16 +560,16 @@ def expand_key_pairs(
     ).select(*_canonical(F.col("da"), F.col("db")))
 
     # -- hot keys: salted triangle join (skew splitting) ------------------
-    salt_id = (
-        F.col("doc_id")
-        if sketch is None
-        else F.col("doc_id")["doc_id"]
-    )
     hot = (
         grouped.where(F.col("n_docs") > cap)  # grouped is <= ceiling already
         .select("key", "n_docs", F.explode("docs").alias("doc_id"))
         .withColumn("s", F.ceil(F.col("n_docs") / cap).cast("int"))
-        .withColumn("g", F.pmod(F.xxhash64(salt_id, F.col("key")), F.col("s")).cast("int"))
+        .withColumn(
+            "g",
+            F.pmod(
+                F.xxhash64(F.col("doc_id")["doc_id"], F.col("key")), F.col("s")
+            ).cast("int"),
+        )
     )
     hot_left = hot.select(
         "key",
@@ -620,9 +600,10 @@ def expand_key_pairs(
         hot_left.repartition(par, "key", "bi", "bj")
         .join(hot_right, ["key", "bi", "bj"])
         .where(
-            (F.col("bi") != F.col("bj")) | _lt(F.col("da"), F.col("db"))
+            (F.col("bi") != F.col("bj"))
+            | (F.col("da")["doc_id"] < F.col("db")["doc_id"])
         )
-        .where(_ne(F.col("da"), F.col("db")))
+        .where(F.col("da")["doc_id"] != F.col("db")["doc_id"])
         .select(*_canonical(F.col("da"), F.col("db")))
     )
 

@@ -73,6 +73,9 @@ _EDGES_PER_DRIVER_MB = 410
 # distributed shuffle that scales with executors. Below the threshold
 # the pre-pass job costs more than the driver seconds it saves.
 _CONTRACT_PREPASS_MIN_EDGES = 1_500_000
+# Round cap of the distributed large/small-star loop: an edge set still
+# changing after this many rounds raises instead of looping on.
+_MAX_STAR_ROUNDS = 25
 
 
 def _driver_contract_bound(spark) -> int:
@@ -268,7 +271,6 @@ def _driver_contract(
 
 def connected_components(
     edges: DataFrame,
-    max_rounds: int = 25,
     driver_finish_max_edges: int | None = None,
     canonical_count: int | None = None,
 ) -> DataFrame:
@@ -315,7 +317,7 @@ def connected_components(
         e, prev_fp = _checkpoint_with_fingerprint(_dedup(e))
         if prev_fp[0] <= driver_finish_max_edges:
             return _driver_contract(e, known_edges=prev_fp[0])
-    for _ in range(max_rounds):
+    for _ in range(_MAX_STAR_ROUNDS):
         # one dedup per round (fingerprint comparison needs a set, and
         # it bounds growth); the stars themselves tolerate duplicates
         e, fp = _checkpoint_with_fingerprint(
@@ -331,7 +333,7 @@ def connected_components(
         prev_fp = fp
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {_MAX_STAR_ROUNDS} rounds"
         )
     # converged edge set is a star forest: src (member) -> dst (root)
     sym = e.unionByName(

@@ -47,36 +47,46 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_hop_expand(
-    edges: DataFrame, seeds: DataFrame, k: int, directed: bool = False
+def _frontier_bfs(
+    e: DataFrame, seeds: DataFrame, k: int, key: list[str]
 ) -> DataFrame:
-    """All nodes within k hops of any seed (G1 analogue).
-
-    seeds(node) -> (node, hop) with the minimal hop distance (seeds
-    at hop 0). Frontier-join BFS: each round joins the frontier to
-    the edge list and anti-joins already-visited nodes, so work is
-    proportional to the expansion, not the graph.
-    """
-    e = edges if directed else _symmetrize(edges)
-    e = e.localCheckpoint()
-    visited = seeds.select(
-        F.col("node"), F.lit(0).alias("hop")
-    ).localCheckpoint()
-    frontier = visited.select("node")
+    """The frontier-join BFS shared by :func:`k_hop_expand` and
+    :func:`k_hop_ball`: ``key`` is ``["node"]`` (one visited set for
+    all seeds) or ``["seed", "node"]`` (one per seed). Each round joins
+    the frontier to the edge list and anti-joins already-visited rows,
+    so work is proportional to the expansion, not the graph. Seeds are
+    a set: a repeated seed row starts one walk."""
+    nodes = seeds.select("node").distinct()
+    if "seed" in key:
+        nodes = nodes.select(F.col("node").alias("seed"), "node")
+    visited = nodes.withColumn("hop", F.lit(0)).localCheckpoint()
+    frontier = visited.select(*key)
     for hop in range(1, k + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+            .select(*key[:-1], F.col("dst").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(visited.select(*key), key, "left_anti")
             .withColumn("hop", F.lit(hop))
         )
         nxt = nxt.localCheckpoint()
         if not nxt.take(1):
             break
         visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("node")
+        frontier = nxt.select(*key)
     return visited
+
+
+def k_hop_expand(
+    edges: DataFrame, seeds: DataFrame, k: int, directed: bool = False
+) -> DataFrame:
+    """All nodes within k hops of any seed (G1 analogue).
+
+    seeds(node) -> (node, hop) with the minimal hop distance (seeds
+    at hop 0), by frontier-join BFS (:func:`_frontier_bfs`).
+    """
+    e = edges if directed else _symmetrize(edges)
+    return _frontier_bfs(e.localCheckpoint(), seeds, k, ["node"])
 
 
 def k_hop_ball(
@@ -103,24 +113,7 @@ def k_hop_ball(
     e = edges if directed else _symmetrize(edges)
     if checkpoint_input:
         e = e.localCheckpoint()
-    visited = seeds.select(
-        F.col("node").alias("seed"), F.col("node"), F.lit(0).alias("hop")
-    ).localCheckpoint()
-    frontier = visited.select("seed", "node")
-    for hop in range(1, k + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("hop", F.lit(hop))
-        )
-        nxt = nxt.localCheckpoint()
-        if not nxt.take(1):
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("seed", "node")
-    return visited
+    return _frontier_bfs(e, seeds, k, ["seed", "node"])
 
 
 def dfs_expand(
@@ -342,6 +335,7 @@ def personalized_pagerank(
         .select(F.col("src").alias("node"), F.lit(True).alias("has_out"))
         .localCheckpoint()
     )
+    seeds = seeds.select("node").distinct()  # a repeated seed row is one seed
     n_seeds = seeds.count()
     restart = seeds.select(
         "node", F.lit(1.0 / n_seeds).alias("restart_mass")

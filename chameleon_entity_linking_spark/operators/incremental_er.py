@@ -64,8 +64,8 @@ def incremental_candidate_pairs(
     new_norm: DataFrame,
     committed_keys: DataFrame,
     cfg: BlockConfig,
+    doc_norm_all: DataFrame,
     score_cfg: ScoreConfig | None = None,
-    doc_norm_all: DataFrame | None = None,
     persisted_out: list | None = None,
     new_keys: DataFrame | None = None,
 ) -> DataFrame:
@@ -78,9 +78,11 @@ def incremental_candidate_pairs(
     (new-new and new-committed; committed-committed pairs are the
     committed run's business).
 
-    With ``score_cfg`` + ``doc_norm_all``, the sign sketch rides the
-    key table and the sketch prefilter fuses into the expansion
-    exactly like the batch path.
+    ``doc_norm_all``: committed + new doc_norm rows. Its sign sketch
+    rides the key table exactly like the batch path; with
+    ``score_cfg.sketch_fused`` the sketch prefilter fuses into the
+    expansion and the pairs carry ``s_cos``, otherwise the output is
+    (doc_a, doc_b).
 
     The new-doc-id membership probes broadcast: the delta batch is
     small relative to the corpus by design. ``new_keys`` optionally
@@ -100,14 +102,9 @@ def incremental_candidate_pairs(
     touched = new_keys.select("key").distinct()
     relevant = committed_keys.join(touched, "key", "left_semi")
     keys = relevant.unionByName(new_keys.select(*relevant.columns))
-    sketch = None
-    if (
-        score_cfg is not None
-        and doc_norm_all is not None
-        and score_cfg.sketch_fused
-    ):
-        sketch = sign_sketch(doc_norm_all)
-    raw, _metrics = expand_key_pairs(keys, cfg, persisted_out, sketch=sketch)
+    raw, _metrics = expand_key_pairs(
+        keys, cfg, persisted_out, sketch=sign_sketch(doc_norm_all)
+    )
     # keep only pairs with >= 1 new endpoint. The new-doc id set is
     # the batch — small relative to the corpus — so both membership
     # probes broadcast.
@@ -124,8 +121,10 @@ def incremental_candidate_pairs(
         .where(F.coalesce("new_a", F.lit(False)) | F.coalesce("new_b", F.lit(False)))
         .drop("new_a", "new_b")
     )
-    if sketch is not None:
+    if score_cfg is not None and score_cfg.sketch_fused:
         raw = sketch_prefilter(raw, doc_norm_all, score_cfg)
+    else:
+        raw = raw.select("doc_a", "doc_b")
     return raw.dropDuplicates(["doc_a", "doc_b"])
 
 
@@ -230,8 +229,8 @@ def incremental_er_update(
         new_norm,
         committed_keys,
         block_cfg,
+        doc_norm_all,
         score_cfg=score_cfg,
-        doc_norm_all=doc_norm_all,
         persisted_out=persisted,
         new_keys=new_keys,
     )

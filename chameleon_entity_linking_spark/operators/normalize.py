@@ -31,20 +31,6 @@ from chameleon_entity_linking_spark.functions.embed import (
 )
 from chameleon_entity_linking_spark.functions.tokenize import tokens_col
 
-NORM_COLUMNS = [
-    "doc_id",
-    "spans",
-    "name_text",
-    "tokens",
-    "media_refs",
-    "tokens_h",
-    "media_h",
-    "embedding",
-    "emb_q",
-    "emb_sig",
-]
-
-
 # 64-bit SIGN sketch (bit i set iff component i < 0): the 8-byte
 # SimHash of the embedding. A >64-dim embedding cannot sign-pack into
 # one long (shiftleft wraps mod 64, which would silently alias sign

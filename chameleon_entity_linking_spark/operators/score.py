@@ -109,9 +109,10 @@ class ScoreConfig:
 
     @property
     def sketch_fused(self) -> bool:
-        """True iff pair generation fuses the sketch prefilter: the
-        sign sketch rides the key table and the emitted pairs carry
-        ``s_cos``, which is how score_pairs knows the prefilter ran."""
+        """True iff the sketch prefilter cut runs inside pair
+        generation (block.candidate_pairs, incremental_candidate_pairs),
+        so the emitted pairs carry ``s_cos`` — which is how score_pairs
+        knows the prefilter ran. Otherwise score_pairs runs it."""
         return self.cascade and self.prefilter_min_cheap is not None
 
     def fingerprint(self) -> dict:

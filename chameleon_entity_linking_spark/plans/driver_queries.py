@@ -712,10 +712,6 @@ def _trigrams_from(t):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _trigrams_col():
-    return _trigrams_from(_toks())
-
-
 def _with_trigrams(docs: DataFrame) -> DataFrame:
     """(doc_id STRING, tg ARRAY<STRING>): trigram arrays with the
     tokenization evaluated exactly once per row (eval-once guard from

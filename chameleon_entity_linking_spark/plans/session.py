@@ -183,8 +183,3 @@ def _package_zip() -> str:
                     z.write(full, rel)
     return out
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -50,9 +50,6 @@ class _LocalFS:
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
 
-    def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
     def read_bytes(self, path: str) -> bytes:
         with open(path, "rb") as f:
             return f.read()
@@ -111,12 +108,6 @@ class _HadoopFS:
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._Path(path)))
-
-    def is_dir(self, path: str) -> bool:
-        p = self._Path(path)
-        return bool(self._fs.exists(p)) and bool(
-            self._fs.getFileStatus(p).isDirectory()
-        )
 
     def read_bytes(self, path: str) -> bytes:
         stream = self._fs.open(self._Path(path))

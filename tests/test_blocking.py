@@ -284,7 +284,9 @@ class TestCandidatePairs:
             cfg = BlockConfig(hot_key_cap=4)
             scfg = ScoreConfig(prefilter_max_hamming=max_hamming)
             committed_keys = blocking_keys(base, cfg)
-            plain = incremental_candidate_pairs(new, committed_keys, cfg)
+            plain = incremental_candidate_pairs(
+                new, committed_keys, cfg, doc_norm_all=dn_all
+            )
             fused = incremental_candidate_pairs(
                 new, committed_keys, cfg, score_cfg=scfg, doc_norm_all=dn_all
             )
@@ -297,6 +299,31 @@ class TestCandidatePairs:
             _assert_sketch_joins_broadcast(builds)
             _assert_broadcast(builds, "doc_a", "new_a")
             _assert_broadcast(builds, "doc_b", "new_b")
+
+    def test_pair_columns_pinned(self, spark):
+        # one pair schema per mode, whatever rides the expansion:
+        # (doc_a, doc_b) unfused, plus s_cos when the prefilter fuses
+        from chameleon_entity_linking_spark.operators.incremental_er import (
+            incremental_candidate_pairs,
+        )
+
+        rows = _sketch_corpus(spark).collect()
+        base = normalize(spark.createDataFrame(rows[::2], _DOCS_SCHEMA))
+        new = normalize(spark.createDataFrame(rows[1::2], _DOCS_SCHEMA))
+        dn_all = base.unionByName(new)
+        cfg = BlockConfig()
+        committed_keys = blocking_keys(base, cfg)
+        for scfg, want in [
+            (None, ["doc_a", "doc_b"]),
+            (ScoreConfig(prefilter_min_cheap=None), ["doc_a", "doc_b"]),
+            (ScoreConfig(), ["doc_a", "doc_b", "s_cos"]),
+        ]:
+            pairs, _ = candidate_pairs(dn_all, cfg, score_cfg=scfg)
+            assert pairs.columns == want, scfg
+            inc = incremental_candidate_pairs(
+                new, committed_keys, cfg, dn_all, score_cfg=scfg
+            )
+            assert inc.columns == want, scfg
 
     def test_md5_tokens_lsh_family_matches_kernel(self, spark):
         from chameleon_entity_linking_spark.functions.minhash import minhash_md5
@@ -356,7 +383,11 @@ class TestFamilyCeilingBelowCap:
         cfg = BlockConfig(
             hot_key_cap=8, max_key_docs=16, family_ceilings={"l": 4}
         )
-        pairs, metrics = expand_key_pairs(keys, cfg)
+        sketch = spark.createDataFrame(
+            [(f"d{i}", 0, False) for i in range(6)],
+            "doc_id string, sig long, mo boolean",
+        )
+        pairs, metrics = expand_key_pairs(keys, cfg, sketch=sketch)
         by_key = {r.key: r["class"] for r in metrics.collect()}
         assert by_key[100] == "dropped"  # 6 > ceiling 4, though <= cap
         assert by_key[200] == "normal"

@@ -86,7 +86,7 @@ class TestConnectedComponents:
 
     def test_long_chain_logarithmic_rounds(self, spark):
         # chain of 40: naive propagation needs ~40 rounds; star
-        # contraction must finish well under max_rounds=25
+        # contraction must finish well under _MAX_STAR_ROUNDS (25)
         nodes = [f"n{i:03d}" for i in range(40)]
         edges = list(zip(nodes, nodes[1:]))
         got = _run_cc(spark, nodes, edges)

@@ -1,15 +1,16 @@
 """Unit tests for the vectorized kernels (SURVEY.md §5.1)."""
 
+import hashlib
+
 import duckdb
 import numpy as np
 import pytest
 
 from chameleon_entity_linking_spark.functions.embed import encode_hashed_batch
 from chameleon_entity_linking_spark.functions.minhash import (
-    band_keys_from_signature,
-    minhash_fast_batch,
+    band_hashes,
+    minhash_fast_from_texts,
     minhash_md5,
-    shingle_base_hash,
 )
 from chameleon_entity_linking_spark.functions.strsim import (
     jaro,
@@ -19,7 +20,6 @@ from chameleon_entity_linking_spark.functions.strsim import (
     levenshtein_batch,
     levenshtein_ratio_batch,
 )
-from chameleon_entity_linking_spark.functions.tokenize import char_shingles
 
 
 class TestLevenshtein:
@@ -132,34 +132,49 @@ class TestMinhash:
         assert minhash_md5([]) == ["f" * 16] * 16
 
     def test_fast_batch_similarity_monotone(self):
-        a = char_shingles(["the", "quick", "brown", "fox"])
-        b = char_shingles(["the", "quick", "brown", "fix"])  # near-dup
-        c = char_shingles(["entirely", "different", "words"])
-        sigs = minhash_fast_batch([a, b, c], n_hashes=128)
+        # near-dup texts agree on more signature rows than unrelated ones
+        sigs = minhash_fast_from_texts(
+            [
+                "the quick brown fox",
+                "the quick brown fix",  # near-dup
+                "entirely different words",
+            ],
+            n_hashes=128,
+        )
         sim_ab = (sigs[0] == sigs[1]).mean()
         sim_ac = (sigs[0] == sigs[2]).mean()
         assert sim_ab > 0.5 > sim_ac
 
     def test_fast_batch_deterministic(self):
-        a = [char_shingles(["hello", "world"])]
-        s1 = minhash_fast_batch(a)
-        s2 = minhash_fast_batch(a)
+        texts = ["hello world", "", "hi"]
+        s1 = minhash_fast_from_texts(texts)
+        s2 = minhash_fast_from_texts(texts)
+        assert s1.dtype == np.uint64 and s1.shape == (3, 64)
         np.testing.assert_array_equal(s1, s2)
+        np.testing.assert_array_equal(
+            band_hashes(s1, 16, 4), band_hashes(s2, 16, 4)
+        )
 
     def test_band_keys(self):
-        sig = list(range(64))
-        keys = band_keys_from_signature(sig, n_bands=16, rows_per_band=4)
-        assert len(keys) == 16 and len(set(keys)) == 16
-        assert keys[0].startswith("b0:")
+        sig = np.arange(64, dtype=np.uint64)[None, :]
+        keys = band_hashes(sig, n_bands=16, rows_per_band=4)
+        assert keys.shape == (1, 16) and keys.dtype == np.int64
+        assert len(set(keys[0].tolist())) == 16
+        # identical bands in every lane: only the lane index separates
+        flat = band_hashes(np.zeros((1, 64), dtype=np.uint64), 16, 4)
+        assert len(set(flat[0].tolist())) == 16
+
+
+def _md5_64(token):
+    """64-bit token hash: the first 8 bytes of md5, big-endian."""
+    return int.from_bytes(hashlib.md5(token.encode()).digest()[:8], "big")
 
 
 def _encode(token_lists):
     """Encode token lists the way the pipeline does: per-token 64-bit
-    hashes (here the md5 base hash, as int64) plus the joined text."""
+    hashes (here an md5 prefix, as int64) plus the joined text."""
     hashes = [
-        np.array([shingle_base_hash(t) for t in toks], dtype=np.uint64).view(
-            np.int64
-        )
+        np.array([_md5_64(t) for t in toks], dtype=np.uint64).view(np.int64)
         for toks in token_lists
     ]
     return encode_hashed_batch(hashes, [" ".join(toks) for toks in token_lists])

@@ -126,6 +126,29 @@ class TestKHopBall:
         }
 
 
+class TestDuplicateSeeds:
+    @pytest.mark.parametrize(
+        "op",
+        [
+            lambda e, s: k_hop_expand(e, s, 2),
+            lambda e, s: k_hop_ball(e, s, 2),
+            lambda e, s: personalized_pagerank(e, s, iterations=5),
+        ],
+        ids=["k_hop_expand", "k_hop_ball", "personalized_pagerank"],
+    )
+    def test_repeated_seed_row_is_one_seed(self, spark, op):
+        # seeds are a set: a duplicated row neither emits a second
+        # hop-0 row nor doubles the seed's restart mass
+        def rows(seeds):
+            # ranks are float sums: compare to 1e-12, not bit-exact
+            return sorted(
+                tuple(round(v, 12) if isinstance(v, float) else v for v in r)
+                for r in op(_edges(spark), _seeds(spark, seeds)).collect()
+            )
+
+        assert rows(["a", "a", "c"]) == rows(["a", "c"])
+
+
 class TestDfsExpand:
     def test_chain_graph_order(self, spark):
         # from a: visit b (smallest nbr), then c, then d vs g — g > d

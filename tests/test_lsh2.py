@@ -100,7 +100,11 @@ class TestLsh2Family:
             ],
             "doc_id string, key long, fam string",
         )
-        raw, _ = expand_key_pairs(keys, BlockConfig())
+        sketch = spark.createDataFrame(
+            [(d, 0, False) for d in "abc"], "doc_id string, sig long, mo boolean"
+        )
+        raw, _ = expand_key_pairs(keys, BlockConfig(), sketch=sketch)
+        raw = raw.select("doc_a", "doc_b")
         got = sorted(map(tuple, raw.distinct().collect()))
         assert got == [("a", "b"), ("a", "c"), ("b", "c")]
         # dedup means the raw stream carries each pair once, not twice
