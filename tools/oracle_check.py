@@ -82,18 +82,25 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per corpus table in ``sf_dir``,
+    named as the oracle texts name them."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(
+                f"create view {t} as select * from read_parquet('{path}')"
+            )
+    return con
+
+
 def main() -> int:
     import __spark_entry__ as entry
     from chameleon_entity_linking_spark.plans.session import get_spark
 
     spark = get_spark(app_name="oracle_check", cores=8, shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"create view {t} as select * from read_parquet('{path}')"
-            )
+    con = duck_views(SF_DIR)
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
