@@ -4,6 +4,13 @@
 normalize -> salted multi-key blocking -> pandas-UDF pair scoring ->
 large-star/small-star connected components) over sf0.001.
 
+Every ER registry query resolves its corpus through the one engine
+composition, ``plans.pipeline.Pipeline``: ``run(documents=...)`` (then
+``incremental`` for the two-batch queries) on a fresh warehouse in the
+session scratch dir (``plans.session.scratch_dir``). The result reads
+the committed ``clusters`` snapshot, which lives until interpreter
+exit like the connected-components contraction spills.
+
 ``queries``/``oracle_sql`` expose every implemented operator from
 SURVEY.md §2 plus the training-data-pipeline operators (dedup,
 similarity search, text analysis); oracles are exact DuckDB SQL —
@@ -14,11 +21,60 @@ comparison locally.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
+from chameleon_entity_linking_spark.operators.block import BlockConfig
+from chameleon_entity_linking_spark.operators.evaluate import confusion_counts
+from chameleon_entity_linking_spark.operators.score import ScoreConfig
 from chameleon_entity_linking_spark.plans.driver_queries import REGISTRY
+from chameleon_entity_linking_spark.plans.pipeline import Pipeline
+from chameleon_entity_linking_spark.plans.session import (
+    SCRATCH_DIR_CONF,
+    scratch_dir,
+)
+from chameleon_entity_linking_spark.sources.readers import (
+    interleave_documents,
+    load,
+    with_synthetic_duplicates,
+)
+
+
+def _resolve(
+    spark: SparkSession,
+    docs: DataFrame,
+    block_cfg: BlockConfig,
+    score_cfg: ScoreConfig,
+    new_docs: DataFrame | None = None,
+) -> DataFrame:
+    """Resolve ``docs`` (then ``new_docs`` as an increment) through
+    ``Pipeline`` on a fresh scratch warehouse, returning cluster
+    assignments (doc_id, cluster_id, cluster_size)."""
+    base = scratch_dir(spark)
+    if base is None:
+        raise ValueError(
+            "the ER registry queries commit to a scratch warehouse; on a "
+            f"non-local master set {SCRATCH_DIR_CONF} to a shared-storage URI"
+        )
+    pipe = Pipeline(
+        spark,
+        f"{base.rstrip('/')}/er_{uuid.uuid4().hex}",
+        block_cfg=block_cfg,
+        score_cfg=score_cfg,
+    )
+    pipe.run(evaluate=False, documents=docs)
+    if new_docs is not None:
+        pipe.incremental(new_docs)
+    clusters = pipe.catalog.read(spark, "clusters")
+    sizes = clusters.groupBy("cluster_id").agg(
+        F.count("*").alias("cluster_size")
+    )
+    return clusters.join(sizes, "cluster_id").select(
+        "doc_id", "cluster_id", "cluster_size"
+    )
 
 
 def _er_pipeline(
@@ -27,76 +83,15 @@ def _er_pipeline(
     """ER pipeline over the interleaved lift of `documents`
     (+ deterministic duplicate mentions), returning cluster
     assignments (doc_id, cluster_id, cluster_size)."""
-    from chameleon_entity_linking_spark.sources.readers import (
-        interleave_documents,
-        load,
-        with_synthetic_duplicates,
-    )
-
     docs = with_synthetic_duplicates(
         interleave_documents(load(spark, sf_dir, "documents"))
     )
-    return _er_pipeline_from_docs(spark, docs, block_cfg, score_cfg)
+    return _resolve(spark, docs, block_cfg, score_cfg)
 
 
-def _er_pipeline_from_docs(
-    spark: SparkSession, docs: DataFrame, block_cfg, score_cfg
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from chameleon_entity_linking_spark.operators.block import candidate_pairs
-    from chameleon_entity_linking_spark.operators.cluster import (
-        assign_clusters,
-        connected_components,
-    )
-    from chameleon_entity_linking_spark.operators.normalize import normalize
-    from chameleon_entity_linking_spark.operators.score import (
-        edges_above_threshold,
-        score_pairs,
-    )
-
-    # normalize() spreads rows itself — a
-    # second outer repartition here was one redundant full shuffle of
-    # the raw corpus (r6); docs feeds assign_clusters via a join,
-    # which needs no pre-spread
-    doc_norm = normalize(docs).persist()
-    persisted = [doc_norm]
-    pairs, _ = candidate_pairs(
-        doc_norm, block_cfg, score_cfg=score_cfg, persisted_out=persisted
-    )
-    edges = edges_above_threshold(
-        score_pairs(pairs, doc_norm, score_cfg), score_cfg
-    )
-    assignments = assign_clusters(docs, connected_components(edges))
-    sizes = assignments.groupBy("cluster_id").agg(
-        F.count("*").alias("cluster_size")
-    )
-    result = assignments.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size"
-    )
-    # registry queries return lazy DFs the caller materializes and
-    # discards, so the expansion's internal caches (doc_norm, key
-    # counts, grouped buckets) would outlive the query and pile up
-    # across a 40+-query gate run. Materialize the SMALL result
-    # eagerly (one row per doc at driver scale; checkpoint storage is
-    # reclaimed with the RDD), then free every cache.
-    result = result.localCheckpoint()
-    for df in persisted:
-        df.unpersist()
-    return result
-
-
-def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _flagship_cfgs() -> tuple[BlockConfig, ScoreConfig]:
     """Production configuration: fast splitmix LSH over char shingles,
-    int8-sketch fused prefilter, full JW/Lev/jaccard/cosine cascade.
-    Genuinely non-SQL-expressible (the embedding encoder and the
-    packed-shingle hash family have no DuckDB equivalent) -> rows-only
-    driver check; the same operators are oracle-checked end-to-end by
-    ``er_pipeline_clusters`` below and component-wise by the rest of
-    the registry."""
-    from chameleon_entity_linking_spark.operators.block import BlockConfig
-    from chameleon_entity_linking_spark.operators.score import ScoreConfig
-
+    int8-sketch fused prefilter, full JW/Lev/jaccard/cosine cascade."""
     # the driver corpus shares a tiny vocabulary, so name-token keys
     # degenerate (every token is stopword-grade); LSH + media carry it.
     # Same reason the match threshold sits far above the default: word
@@ -121,9 +116,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so their junk mega-buckets never enter the salted triangle.
     # Verified identical cluster output at all three pinned scale
     # factors vs the global-2048 round-4 config.
-    return _er_pipeline(
-        spark,
-        sf_dir,
+    return (
         BlockConfig(
             use_token_keys=False,
             hot_key_cap=128,
@@ -139,18 +132,39 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-paired configuration of the SAME pipeline operators:
-    md5-token MinHash-LSH bands (4 bands x 2 rows) + exact media keys,
-    count-capped blocking, JW + Levenshtein-ratio + token-jaccard
-    (+ media mix) scoring at threshold 0.8, large-star/small-star
-    transitive clustering, singleton attachment, cluster sizes.
-    Every construction is bit-reproducible in DuckDB SQL (md5 minhash
-    family, rapidfuzz-parity string kernels, recursive-CTE closure) —
-    the driver verifies rows+schema+hash of the END-TO-END result."""
-    from chameleon_entity_linking_spark.operators.block import BlockConfig
-    from chameleon_entity_linking_spark.operators.score import ScoreConfig
+def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production configuration (``_flagship_cfgs``) over the
+    driver corpus. Genuinely non-SQL-expressible (the embedding encoder
+    and the packed-shingle hash family have no DuckDB equivalent) ->
+    rows-only driver check; the same ``Pipeline`` composition is
+    oracle-checked end-to-end by ``er_pipeline_clusters`` below and
+    its operators component-wise by the rest of the registry."""
+    return _er_pipeline(spark, sf_dir, *_flagship_cfgs())
 
+
+def _oracle_score_cfg() -> ScoreConfig:
+    """The oracle-expressible scoring (w_cos=0, no sketch prefilter)
+    of er_pipeline_clusters and the incremental queries."""
+    return ScoreConfig(
+        w_jw=0.4,
+        w_lev=0.3,
+        w_tok=0.3,
+        w_cos=0.0,
+        threshold=0.8,
+        prefilter_min_cheap=None,
+    )
+
+
+def _flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-paired configuration of the SAME ``Pipeline``
+    composition: md5-token MinHash-LSH bands (4 bands x 2 rows) + exact
+    media keys, count-capped blocking, JW + Levenshtein-ratio +
+    token-jaccard (+ media mix) scoring at threshold 0.8,
+    large-star/small-star transitive clustering, singleton attachment,
+    cluster sizes. Every construction is bit-reproducible in DuckDB SQL
+    (md5 minhash family, rapidfuzz-parity string kernels,
+    recursive-CTE closure) — the driver verifies rows+schema+hash of
+    the END-TO-END result."""
     return _er_pipeline(
         spark,
         sf_dir,
@@ -162,14 +176,7 @@ def _flagship_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsh_hashes=8,
             lsh_bands=4,
         ),
-        ScoreConfig(
-            w_jw=0.4,
-            w_lev=0.3,
-            w_tok=0.3,
-            w_cos=0.0,
-            threshold=0.8,
-            prefilter_min_cheap=None,
-        ),
+        _oracle_score_cfg(),
     )
 
 
@@ -279,9 +286,10 @@ FROM assign JOIN sizes ON sizes.cluster_id = assign.cluster_id
 def _incremental_er_query(hot_key_cap: int = 64, max_key_docs: int = 64):
     """Build a cross-run incremental-dedup registry query
     (operators/incremental_er.py) in the oracle-expressible md5-LSH
-    family: batch 1 = the interleaved base corpus, fully resolved and
-    "committed"; batch 2 = the synthetic duplicate mentions arriving
-    later. The incremental path blocks batch 2's keys against the
+    family: batch 1 = the interleaved base corpus, resolved and
+    committed by ``Pipeline.run``; batch 2 = the synthetic duplicate
+    mentions arriving later, through ``Pipeline.incremental``. The
+    incremental path blocks batch 2's keys against the
     committed key table (full-corpus member counts), scores ONLY pairs
     with >= 1 new endpoint, and merges the new edges into the
     committed clusters by re-clustering only the affected components —
@@ -298,97 +306,21 @@ def _incremental_er_query(hot_key_cap: int = 64, max_key_docs: int = 64):
     never unlinks)."""
 
     def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _incremental_er_clusters_impl(
-            spark, sf_dir, hot_key_cap, max_key_docs
+        base = interleave_documents(load(spark, sf_dir, "documents"))
+        new_docs = with_synthetic_duplicates(base).join(
+            base.select("doc_id"), "doc_id", "left_anti"
         )
+        block_cfg = BlockConfig(
+            use_token_keys=False,
+            lsh_family="md5_tokens",
+            lsh_hashes=8,
+            lsh_bands=4,
+            hot_key_cap=hot_key_cap,
+            max_key_docs=max_key_docs,
+        )
+        return _resolve(spark, base, block_cfg, _oracle_score_cfg(), new_docs)
 
     return _q
-
-
-def _incremental_er_clusters_impl(
-    spark: SparkSession, sf_dir: str, hot_key_cap: int, max_key_docs: int
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from chameleon_entity_linking_spark.operators.block import (
-        BlockConfig,
-        blocking_keys,
-        candidate_pairs,
-    )
-    from chameleon_entity_linking_spark.operators.cluster import (
-        assign_clusters,
-        connected_components,
-    )
-    from chameleon_entity_linking_spark.operators.incremental_er import (
-        incremental_er_update,
-    )
-    from chameleon_entity_linking_spark.operators.normalize import normalize
-    from chameleon_entity_linking_spark.operators.score import (
-        ScoreConfig,
-        edges_above_threshold,
-        score_pairs,
-    )
-    from chameleon_entity_linking_spark.sources.readers import (
-        interleave_documents,
-        load,
-        with_synthetic_duplicates,
-    )
-
-    block_cfg = BlockConfig(
-        use_token_keys=False,
-        lsh_family="md5_tokens",
-        lsh_hashes=8,
-        lsh_bands=4,
-        hot_key_cap=hot_key_cap,
-        max_key_docs=max_key_docs,
-    )
-    score_cfg = ScoreConfig(
-        w_jw=0.4,
-        w_lev=0.3,
-        w_tok=0.3,
-        w_cos=0.0,
-        threshold=0.8,
-        prefilter_min_cheap=None,
-    )
-    base = interleave_documents(load(spark, sf_dir, "documents")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    full = with_synthetic_duplicates(base)
-    new_docs = full.join(base.select("doc_id"), "doc_id", "left_anti")
-    # committed run over batch 1
-    norm1 = normalize(base).persist()
-    persisted = [norm1]
-    pairs1, _ = candidate_pairs(
-        norm1, block_cfg, score_cfg=score_cfg, persisted_out=persisted
-    )
-    edges1 = edges_above_threshold(
-        score_pairs(pairs1, norm1, score_cfg), score_cfg
-    )
-    assign1 = assign_clusters(base, connected_components(edges1))
-    # incremental step over batch 2 (committed keys re-derived here —
-    # deterministic per doc; production commits them, see the catalog
-    # flow in tests/test_incremental_er.py)
-    _edges2, merged = incremental_er_update(
-        new_docs,
-        norm1,
-        blocking_keys(norm1, block_cfg),
-        assign1,
-        block_cfg,
-        score_cfg,
-        persisted_out=persisted,
-    )
-    sizes = merged.groupBy("cluster_id").agg(
-        F.count("*").alias("cluster_size")
-    )
-    result = merged.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size"
-    )
-    # same cache discipline as _er_pipeline_from_docs: materialize the
-    # small result, then free the run's internal caches
-    result = result.localCheckpoint()
-    for df in persisted:
-        df.unpersist()
-    return result
 
 
 def _incremental_oracle_sql(cap_lo: int = 2, cap_hi: int = 64) -> str:
@@ -510,8 +442,6 @@ def _flagship_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus key — row count + total text chars — so the invariant
     holds at any pinned scale factor; sf0.001, sf0.01 and sf0.1 are
     pinned.)"""
-    from pyspark.sql import functions as F
-
     return (
         _flagship(spark, sf_dir)
         .groupBy("cluster_size")
@@ -550,11 +480,6 @@ def _flagship_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated doc's mention. The north rule's F1 >= 0.99 quality bar
     thereby sits in the driver contract (oracle = pinned per-sf
     expected counts, corpus-size-dispatched), not only in pytest."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from chameleon_entity_linking_spark.sources.readers import load
-
     assignments = _flagship(spark, sf_dir).select("doc_id", "cluster_id")
     srcs = (
         load(spark, sf_dir, "documents")
@@ -578,10 +503,6 @@ def _flagship_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat("nxt", F.lit("_dup")).alias("doc_b"),
         F.lit(False).alias("is_match"),
     )
-    from chameleon_entity_linking_spark.operators.evaluate import (
-        confusion_counts,
-    )
-
     return confusion_counts(pos.unionByName(neg), assignments)
 
 
@@ -611,13 +532,6 @@ def _x10_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-key paths the small corpus never reaches — salted-triangle
     splitting, per-family ceiling drops, lsh2 mega-buckets — run with
     real work at driver-checkable scale."""
-    from pyspark.sql import functions as F
-
-    from chameleon_entity_linking_spark.sources.readers import (
-        interleave_documents,
-        load,
-    )
-
     base = interleave_documents(load(spark, sf_dir, "documents"))
     exp = base.select(
         "doc_id",
@@ -668,28 +582,8 @@ def _flagship_x10_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     position a regression-guarded, documented quantity instead of a
     silent one; resolving denser corpora is a ceiling-retune, which
     the per-family knob localizes to the lsh2 family."""
-    from pyspark.sql import functions as F
-
-    from chameleon_entity_linking_spark.operators.block import BlockConfig
-    from chameleon_entity_linking_spark.operators.score import ScoreConfig
-
     return (
-        _er_pipeline_from_docs(
-            spark,
-            _x10_corpus(spark, sf_dir),
-            BlockConfig(
-                use_token_keys=False,
-                hot_key_cap=128,
-                max_key_docs=256,
-                lsh2_bands=8,
-                family_ceilings={"l2": 2048},
-            ),
-            ScoreConfig(
-                threshold=0.905,
-                prefilter_min_cheap=0.9,
-                prefilter_max_hamming=16,
-            ),
-        )
+        _resolve(spark, _x10_corpus(spark, sf_dir), *_flagship_cfgs())
         .groupBy("cluster_size")
         .agg(F.countDistinct("cluster_id").alias("n_clusters"))
     )

@@ -24,30 +24,16 @@ for the scale argument).
 
 from __future__ import annotations
 
-import atexit
 import itertools
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# One session-scoped spill directory for every driver contraction in
-# this process, removed at interpreter exit — a long-lived session no
-# longer leaks one /tmp dir per contraction, and nothing external can
-# delete a file a lazily-read DataFrame still points at mid-session.
-_SPILL_DIR: list[str] = []
+from chameleon_entity_linking_spark.plans.session import scratch_dir
+
+# numbers the contraction spills inside the session scratch dir
 _SPILL_SEQ = itertools.count()
-
-
-def _spill_dir() -> str:
-    if not _SPILL_DIR:
-        d = tempfile.mkdtemp(prefix="cc_contract_")
-        _SPILL_DIR.append(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return _SPILL_DIR[0]
 
 # Ceiling for the driver-side contraction epilogue (see
 # connected_components): 10M edges ~= 500MB of ids on the driver —
@@ -241,32 +227,29 @@ def _driver_contract(
     out = pa.table(
         {"doc_id": ids, "cluster_id": ids.take(pa.array(labels))}
     )
-    # hand the result back as a parquet spill where executors share
-    # the driver's filesystem (local / local-cluster masters):
-    # createDataFrame pins the rows on the driver and re-ships them
-    # through Py4J on EVERY downstream action (~1.8s at 450k rows vs
-    # ~0.3s for write+read, measured). On a real cluster the local
-    # path is not executor-visible; set ``spark.chameleon.cc.spillDir``
-    # to a shared-storage URI (hdfs://, s3a://, ...) and the result is
-    # shipped ONCE (createDataFrame -> parquet write there) and read
-    # back distributed — every downstream action then scans the spill
-    # instead of re-shipping through Py4J. With neither, plain
-    # createDataFrame (correct, re-ships per action).
-    master = spark.conf.get("spark.master", "")
-    if master.startswith("local"):
+    # hand the result back as a parquet spill in the session scratch
+    # dir (plans.session.scratch_dir): createDataFrame pins the rows
+    # on the driver and re-ships them through Py4J on EVERY downstream
+    # action (~1.8s at 450k rows vs ~0.3s for write+read, measured).
+    # Under a local master executors share the driver's filesystem, so
+    # pyarrow writes the spill directly; on a real cluster the result
+    # is shipped ONCE (createDataFrame -> parquet write to the
+    # shared-storage ``spark.chameleon.cc.spillDir``) and read back
+    # distributed. With no scratch dir, plain createDataFrame
+    # (correct, re-ships per action).
+    base = scratch_dir(spark)
+    if base is None:
+        return spark.createDataFrame(out, out_schema)
+    path = f"{base.rstrip('/')}/contract_{next(_SPILL_SEQ)}.parquet"
+    if spark.conf.get("spark.master", "").startswith("local"):
         import pyarrow.parquet as pq
 
-        path = os.path.join(_spill_dir(), f"contract_{next(_SPILL_SEQ)}.parquet")
         pq.write_table(out, path)
-        return spark.read.schema(out_schema).parquet(path)
-    spill_base = spark.conf.get("spark.chameleon.cc.spillDir", None)
-    if spill_base:
-        path = f"{spill_base.rstrip('/')}/contract_{next(_SPILL_SEQ)}"
+    else:
         spark.createDataFrame(out, out_schema).write.mode("overwrite").parquet(
             path
         )
-        return spark.read.schema(out_schema).parquet(path)
-    return spark.createDataFrame(out, out_schema)
+    return spark.read.schema(out_schema).parquet(path)
 
 
 def connected_components(

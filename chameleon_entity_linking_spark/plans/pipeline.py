@@ -10,11 +10,13 @@ north rule T1).
 
 Stages:
   ingest     synthesize (or accept) the interleaved documents table
+             (``run(documents=...)`` resolves a given corpus)
   normalize  span features (map-only)
   block      candidate pairs (salted multi-key self-join)
   score      pairwise scoring -> edges (two hash joins + map)
   cluster    large-star/small-star CC -> cluster assignments
-  evaluate   pairwise F1 vs labels (if labels exist)
+  evaluate   pairwise F1 vs labels (if labels were ingested with
+             the current documents)
 
 A stage is skipped iff its table is committed with a lineage
 fingerprint equal to the current (config, input-snapshot) pair —
@@ -26,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,7 +112,13 @@ class Pipeline:
         return self.catalog.read(self.spark, table)
 
     # -- stages ---------------------------------------------------------
-    def ingest(self) -> DataFrame:
+    def ingest(self, documents: DataFrame | None = None) -> DataFrame:
+        if documents is not None:
+            # a DataFrame has no cheap identity: a fresh fingerprint
+            # commits it as a new snapshot on every call
+            return self._run_stage(
+                "ingest", "documents", uuid.uuid4().hex, lambda: documents
+            )
         fp = _fp({"synth": vars(self.synth_cfg)})
         tables = synth_tables(self.spark, self.synth_cfg)
         docs = self._run_stage(
@@ -124,15 +133,31 @@ class Pipeline:
         )
         return docs
 
-    def run(self, evaluate: bool = True) -> dict:
-        docs = self.ingest()
-        in_snap = self.catalog.current_snapshot("documents").snapshot_id
+    def run(
+        self, evaluate: bool = True, documents: DataFrame | None = None
+    ) -> dict:
+        """Resolve the corpus into committed ``clusters``.
+
+        ``documents``: input-hint-shaped (doc_id, spans) rows to
+        resolve. None synthesizes the corpus from ``synth_cfg`` (with
+        its labels) and resumes every stage already committed for it.
+        A given DataFrame is committed as a new ``documents`` snapshot
+        on every call, because a DataFrame has no cheap identity; the
+        downstream stages key on that snapshot, so they all rerun.
+
+        ``evaluate`` scores the clusters against ``labels`` only when
+        those labels were ingested with the current documents (same
+        lineage fingerprint) — never a given corpus against labels a
+        synth run left in the warehouse.
+        """
+        docs = self.ingest(documents)
+        doc_snap = self.catalog.current_snapshot("documents")
 
         # bump the version term whenever normalize's output schema or
         # semantics change — stale checkpoints must not resume-skip
         # v4: vectorized splitmix64 encoder (xxhash64 token features)
         # v5: emb_sig sign-sketch column (scoring phase-0 prefilter)
-        norm_fp = _fp({"normalize": 5, "in": in_snap})
+        norm_fp = _fp({"normalize": 5, "in": doc_snap.snapshot_id})
         doc_norm = self._run_stage(
             "normalize", "doc_norm", norm_fp, lambda: normalize(docs)
         )
@@ -188,9 +213,11 @@ class Pipeline:
             )
             return pairs
 
-        pairs = self._run_stage("block", "pairs", block_fp, build_pairs)
-        for df in persisted:  # pairs snapshot is committed; free the cache
-            df.unpersist()
+        try:
+            pairs = self._run_stage("block", "pairs", block_fp, build_pairs)
+        finally:  # committed or failed: free the expansion's caches
+            for df in persisted:
+                df.unpersist()
 
         score_fp = _fp({"score": self.score_cfg.fingerprint(), "in": block_fp})
         scored = self._run_stage(
@@ -223,7 +250,7 @@ class Pipeline:
         )
 
         result: dict = {
-            "n_docs": self.catalog.current_snapshot("documents").row_count,
+            "n_docs": doc_snap.row_count,
             "n_pairs": self.catalog.current_snapshot("pairs").row_count,
             "n_edges": self.catalog.current_snapshot("edges").row_count,
             "n_clusters_rows": self.catalog.current_snapshot(
@@ -231,7 +258,7 @@ class Pipeline:
             ).row_count,
             "timings": dict(self.timings),
         }
-        if evaluate and self.catalog.exists("labels"):
+        if evaluate and self._done("labels", doc_snap.lineage["fingerprint"]):
             labels = self.catalog.read(self.spark, "labels")
             result["metrics"] = pairwise_f1(labels, assignments)
             self.catalog.write(
@@ -325,18 +352,9 @@ class Pipeline:
         )
         new_norm = normalize(new_docs).persist()
         new_keys = blocking_keys(new_norm, self.block_cfg).persist()
-        persisted: list = []
-        new_edges, merged = incremental_er_update(
-            new_docs,
-            committed_norm,
-            committed_keys,
-            committed_assign,
-            self.block_cfg,
-            self.score_cfg,
-            new_norm=new_norm,
-            new_keys=new_keys,
-            persisted_out=persisted,
-        )
+        # plus the expansion-internal caches (see incremental_er_update's
+        # persisted_out); freed whether or not the commits succeed
+        persisted: list = [new_norm, new_keys]
         inc_fp = _fp(
             {
                 "incremental": True,
@@ -347,19 +365,36 @@ class Pipeline:
         lineage = {"stage": "incremental", "fingerprint": inc_fp}
         if batch_id is not None:
             lineage["batch_id"] = batch_id
-        self.catalog.write("documents", new_docs, mode="append", lineage=lineage)
-        self.catalog.write("doc_norm", new_norm, mode="append", lineage=lineage)
-        self.catalog.write(
-            "blocking_keys", new_keys, mode="append", lineage=lineage
-        )
-        edge_snap = self.catalog.write(
-            "edges", new_edges, mode="append", lineage=lineage
-        )
-        cluster_snap = self.catalog.write("clusters", merged, lineage=lineage)
-        new_norm.unpersist()
-        new_keys.unpersist()
-        for df in persisted:  # expansion-internal caches (see
-            df.unpersist()  # incremental_er_update's persisted_out)
+        try:
+            new_edges, merged = incremental_er_update(
+                new_docs,
+                committed_norm,
+                committed_keys,
+                committed_assign,
+                self.block_cfg,
+                self.score_cfg,
+                new_norm=new_norm,
+                new_keys=new_keys,
+                persisted_out=persisted,
+            )
+            self.catalog.write(
+                "documents", new_docs, mode="append", lineage=lineage
+            )
+            self.catalog.write(
+                "doc_norm", new_norm, mode="append", lineage=lineage
+            )
+            self.catalog.write(
+                "blocking_keys", new_keys, mode="append", lineage=lineage
+            )
+            edge_snap = self.catalog.write(
+                "edges", new_edges, mode="append", lineage=lineage
+            )
+            cluster_snap = self.catalog.write(
+                "clusters", merged, lineage=lineage
+            )
+        finally:
+            for df in persisted:
+                df.unpersist()
         self.timings["incremental"] = time.time() - t0
         return {
             "n_new_docs": self.catalog.current_snapshot("documents").row_count,

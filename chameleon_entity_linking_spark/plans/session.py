@@ -14,11 +14,16 @@ optimizer cannot infer:
   reference's inference batch size, BiEncoder/model.py:71).
 - An explicit checkpoint dir for the iterative connected-components
   job (lineage truncation — classic iterative-join requirement).
+
+``scratch_dir`` is the one rule for where session-scoped scratch data
+(CC contraction spills, the driver queries' warehouses) lives.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -162,6 +167,29 @@ def get_spark(
     )
     spark.sparkContext.setCheckpointDir(ckpt)
     return spark
+
+
+# shared-storage URI for session scratch data on a non-local master
+SCRATCH_DIR_CONF = "spark.chameleon.cc.spillDir"
+_LOCAL_SCRATCH: list[str] = []
+
+
+def scratch_dir(spark: SparkSession) -> str | None:
+    """Where this session's scratch data lives: data that lazily-read
+    DataFrames still point at, so it must outlive any one query.
+
+    Under a local master (executors share the driver's filesystem) it
+    is one temp dir per process, removed at interpreter exit — nothing
+    external can delete a file a DataFrame still reads mid-session. On
+    any other master it is the ``spark.chameleon.cc.spillDir`` URI
+    (hdfs://, s3a://, ...), or None when that conf is unset."""
+    if spark.conf.get("spark.master", "").startswith("local"):
+        if not _LOCAL_SCRATCH:
+            d = tempfile.mkdtemp(prefix="cel_scratch_")
+            _LOCAL_SCRATCH.append(d)
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+        return _LOCAL_SCRATCH[0]
+    return spark.conf.get(SCRATCH_DIR_CONF, None)
 
 
 def _package_zip() -> str:

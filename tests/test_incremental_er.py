@@ -590,3 +590,42 @@ class TestBatchReplayGuard:
         assert cat.read(spark, "t").count() == 10
         with pytest.raises(ValueError):
             cat.rollback("t", 5)
+
+
+class TestPipelineDocumentsInput:
+    """Pipeline.run(documents=...) resolves a corpus synth did not
+    produce, and the Pipeline.incremental docstring's equivalence
+    claim holds on it."""
+
+    def _pipe(self, spark, wh, **kw):
+        from chameleon_entity_linking_spark.plans.pipeline import Pipeline
+
+        return Pipeline(
+            spark, wh, block_cfg=BLOCK_CFG, score_cfg=SCORE_CFG, **kw
+        )
+
+    def test_run_then_incremental_equals_run_over_union(self, spark, tmp_path):
+        inc = self._pipe(spark, str(tmp_path / "inc"))
+        inc.run(evaluate=False, documents=_docs(spark, BATCH1))
+        inc.incremental(_docs(spark, BATCH2))
+        full = self._pipe(spark, str(tmp_path / "full"))
+        res = full.run(evaluate=False, documents=_docs(spark, BATCH1 + BATCH2))
+        assert res["n_docs"] == len(BATCH1) + len(BATCH2)
+
+        def rows(p):
+            return sorted(map(tuple, p.catalog.read(spark, "clusters").collect()))
+
+        assert rows(inc) == rows(full)
+
+    def test_given_documents_not_scored_against_synth_labels(
+        self, spark, tmp_path
+    ):
+        from chameleon_entity_linking_spark.sources.synth import SynthConfig
+
+        p = self._pipe(
+            spark, str(tmp_path / "wh"), synth_cfg=SynthConfig(n_entities=30, seed=3)
+        )
+        assert "metrics" in p.run()
+        out = p.run(documents=_docs(spark, BATCH1))
+        assert "metrics" not in out
+        assert out["n_docs"] == len(BATCH1)

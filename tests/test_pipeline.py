@@ -209,3 +209,46 @@ class TestKeyFingerprint:
         )
         p3.run(evaluate=False)
         assert p3.timings["block_keys"] > 0.0  # keys rebuilt
+
+
+class TestCommitFailureFreesCaches:
+    """A failed commit must not leave the stage's caches pinned in the
+    session: the pairs stage and the incremental step unpersist in a
+    ``finally``."""
+
+    @staticmethod
+    def _fail_on(monkeypatch, table, mode):
+        from chameleon_entity_linking_spark.sources.catalog import ParquetCatalog
+
+        real = ParquetCatalog.write
+
+        def write(self, name, df, **kw):
+            if name == table and kw.get("mode", "overwrite") == mode:
+                raise OSError(f"injected {mode} failure on {table}")
+            return real(self, name, df, **kw)
+
+        monkeypatch.setattr(ParquetCatalog, "write", write)
+
+    @staticmethod
+    def _cache_empty(spark):
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_pairs_commit_failure(self, spark, tmp_path, monkeypatch):
+        spark.catalog.clearCache()
+        self._fail_on(monkeypatch, "pairs", "overwrite")
+        p = Pipeline(spark, str(tmp_path / "wh"), synth_cfg=SynthConfig(n_entities=30, seed=5))
+        with pytest.raises(OSError, match="injected"):
+            p.run(evaluate=False)
+        assert self._cache_empty(spark)
+
+    def test_incremental_edges_append_failure(self, spark, tmp_path, monkeypatch):
+        p = Pipeline(spark, str(tmp_path / "wh"), synth_cfg=SynthConfig(n_entities=30, seed=5))
+        p.run(evaluate=False)
+        new_docs = p.catalog.read(spark, "documents").limit(5).withColumn(
+            "doc_id", F.concat("doc_id", F.lit("_new"))
+        )
+        spark.catalog.clearCache()
+        self._fail_on(monkeypatch, "edges", "append")
+        with pytest.raises(OSError, match="injected"):
+            p.incremental(new_docs)
+        assert self._cache_empty(spark)

@@ -1,4 +1,7 @@
-"""Session defaults: the driver heap is sized from the host."""
+"""Session defaults: the driver heap is sized from the host, and
+session scratch data has one home."""
+
+import pytest
 
 from chameleon_entity_linking_spark.plans.session import (
     _parse_jvm_mem_mb,
@@ -49,3 +52,35 @@ def test_driver_contract_bound_within_configured_heap(spark):
     assert 0 < bound <= DRIVER_FINISH_MAX_EDGES
     conf_mb = _parse_jvm_mem_mb(spark.conf.get("spark.driver.memory"))
     assert bound <= 410 * (conf_mb + 32)
+
+
+class _StubSpark:
+    """Just the runtime-conf surface ``scratch_dir`` reads."""
+
+    def __init__(self, conf):
+        self.conf = self
+        self._conf = conf
+
+    def get(self, key, default=None):
+        return self._conf.get(key, default)
+
+
+def test_scratch_dir_off_local_master_is_the_spill_conf():
+    from chameleon_entity_linking_spark.plans.session import (
+        SCRATCH_DIR_CONF,
+        scratch_dir,
+    )
+
+    master = {"spark.master": "spark://head:7077"}
+    assert scratch_dir(_StubSpark(master)) is None
+    uri = "hdfs://nn/scratch"
+    assert scratch_dir(_StubSpark({**master, SCRATCH_DIR_CONF: uri})) == uri
+
+
+def test_er_query_without_scratch_dir_names_the_conf():
+    import __spark_entry__ as entry
+    from chameleon_entity_linking_spark.plans.session import SCRATCH_DIR_CONF
+
+    stub = _StubSpark({"spark.master": "yarn"})
+    with pytest.raises(ValueError, match=SCRATCH_DIR_CONF.replace(".", r"\.")):
+        entry._resolve(stub, None, None, None)
