@@ -15,8 +15,6 @@ import pytest
 
 import __spark_entry__ as entry
 
-SF_DIR = "/root/testdata/sf0.001"
-
 _spec = importlib.util.spec_from_file_location(
     "oracle_check",
     os.path.join(
@@ -27,6 +25,9 @@ _spec = importlib.util.spec_from_file_location(
 )
 oracle_check = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(oracle_check)
+
+# the smallest pinned corpus, beside the tool's default scale factor
+SF_DIR = os.path.join(os.path.dirname(oracle_check.SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="module")
