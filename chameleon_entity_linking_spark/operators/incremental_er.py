@@ -36,6 +36,16 @@ restricted slice flows into the grouped expansion — the same
 count-classified, salted, filter-before-collect discipline as the
 batch path (block.expand_key_pairs). The dominant cost is
 O(|new keys| + |touched committed keys| + |new pairs|).
+
+Two steps, split at the commit boundary: ``incremental_edges`` builds
+the delta's lazy edge plan (blocking + scoring), and
+``merge_clusters`` folds edges into the committed clusters.
+Pipeline.incremental commits the edges between the two, so the merge
+reads committed parquet rows and the delta plan (with its pandas-UDF
+stages) runs once — the merge's probes and connected components'
+eager checkpoint would each re-run an uncommitted plan.
+``incremental_er_update`` chains both for callers that commit
+nothing.
 """
 
 from __future__ import annotations
@@ -188,32 +198,32 @@ def merge_clusters(
     )
 
 
-def incremental_er_update(
+def incremental_edges(
     new_docs: DataFrame,
     committed_norm: DataFrame,
     committed_keys: DataFrame,
-    committed_assignments: DataFrame,
     block_cfg: BlockConfig,
     score_cfg: ScoreConfig,
     new_norm: DataFrame | None = None,
     new_keys: DataFrame | None = None,
     persisted_out: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """One incremental ER step: returns (new_edges, merged_assignments).
+) -> DataFrame:
+    """The delta's block + score step: the lazy plan of its new edges.
 
-    ``new_docs`` are input-hint-shaped (doc_id, spans); everything
-    committed comes from the prior run's catalog tables. The caller
-    commits the outputs (edges as an APPEND snapshot, assignments as
-    an overwrite) — see Pipeline.incremental (plans/pipeline.py) and
-    tests/test_incremental_er.py for the catalog-integrated flow.
+    ``new_docs`` are input-hint-shaped (doc_id, spans); ``committed_norm``
+    and ``committed_keys`` come from the prior run's catalog tables.
     ``new_norm``/``new_keys`` optionally supply already-materialized
     features/keys for the batch (the pipeline commits both, so the
-    next increment starts from committed tables).
+    next increment starts from committed tables). Returns the
+    (doc_a, doc_b, score) edges above threshold with >= 1 new
+    endpoint. The plan runs the delta's pandas-UDF stages, so a caller
+    that commits it should hand ``merge_clusters`` the committed rows
+    (Pipeline.incremental), not this plan.
 
     ``persisted_out``: the step ``.persist()``s intermediates (key
     counts, grouped buckets, an internally-derived ``new_norm``) that
-    must stay cached until the caller MATERIALIZES the outputs. Pass a
-    list and unpersist its entries after committing — otherwise each
+    must stay cached until the caller MATERIALIZES the edges. Pass a
+    list and unpersist its entries afterwards — otherwise each
     incremental run leaks cached blocks into executor storage for the
     session's lifetime (the same contract as
     ``block.candidate_pairs``'s ``persisted_out``).
@@ -234,8 +244,42 @@ def incremental_er_update(
         persisted_out=persisted,
         new_keys=new_keys,
     )
-    new_edges = edges_above_threshold(
+    return edges_above_threshold(
         score_pairs(pairs, doc_norm_all, score_cfg), score_cfg
+    )
+
+
+def incremental_er_update(
+    new_docs: DataFrame,
+    committed_norm: DataFrame,
+    committed_keys: DataFrame,
+    committed_assignments: DataFrame,
+    block_cfg: BlockConfig,
+    score_cfg: ScoreConfig,
+    new_norm: DataFrame | None = None,
+    new_keys: DataFrame | None = None,
+    persisted_out: list | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """One incremental ER step: returns (new_edges, merged_assignments).
+
+    The one-call form for callers that commit nothing:
+    ``incremental_edges`` then ``merge_clusters`` over its lazy edge
+    plan, so materializing both outputs runs the delta's block + score
+    plan more than once. A caller that commits the edges should call
+    the two steps itself and merge the committed rows, as
+    Pipeline.incremental (plans/pipeline.py) does. Arguments and the
+    ``persisted_out`` contract are ``incremental_edges``'; keep the
+    cached intermediates until both outputs are materialized.
+    """
+    new_edges = incremental_edges(
+        new_docs,
+        committed_norm,
+        committed_keys,
+        block_cfg,
+        score_cfg,
+        new_norm=new_norm,
+        new_keys=new_keys,
+        persisted_out=persisted_out,
     )
     all_docs = committed_assignments.select("doc_id").unionByName(
         new_docs.select("doc_id")

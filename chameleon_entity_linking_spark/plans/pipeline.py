@@ -44,6 +44,10 @@ from chameleon_entity_linking_spark.operators.cluster import (
     connected_components,
 )
 from chameleon_entity_linking_spark.operators.evaluate import pairwise_f1
+from chameleon_entity_linking_spark.operators.incremental_er import (
+    incremental_edges,
+    merge_clusters,
+)
 from chameleon_entity_linking_spark.operators.normalize import normalize
 from chameleon_entity_linking_spark.operators.score import (
     ScoreConfig,
@@ -287,11 +291,16 @@ class Pipeline:
         ``clusters`` snapshots (a full batch ``run()`` must have
         committed them); derives features + keys for the new batch
         ONLY — the committed key table is probed via semi-join, never
-        re-derived — then commits:
+        re-derived — then commits, in this order:
 
           documents, doc_norm, blocking_keys   APPEND (the new batch)
           edges                                APPEND (new edges only)
           clusters                             overwrite (merged)
+
+        The ``edges`` append is where the delta's block + score plan
+        runs, once: ``merge_clusters`` then reads only the rows that
+        append wrote (``catalog.read_written``), never the uncommitted
+        edge plan.
 
         After the commit the catalog is in the same state a fresh full
         run over the union corpus would leave for a subsequent
@@ -299,20 +308,18 @@ class Pipeline:
         doc, old and new.
 
         ``batch_id`` (recommended in production): the replay guard.
-        The five commits below are not one transaction; with a batch
-        id recorded in their lineage, a retry of a FULLY-committed
-        batch is a no-op ({"skipped": True}), and a retry after a
+        The five commits are not one transaction; with a batch id
+        recorded in their lineage, a retry of a FULLY-committed batch
+        is a no-op ({"skipped": True}), and a retry after a
         mid-sequence crash raises instead of double-appending the
-        batch into documents/doc_norm/blocking_keys/edges — roll the
+        batch into documents/doc_norm/blocking_keys/edges. A crash in
+        the merge (after the ``edges`` commit) leaves all four appends
+        committed and ``clusters`` at its pre-batch snapshot: roll the
         partially-touched tables back to their pre-batch snapshots
         (``catalog.rollback``) and retry. Without a batch id no guard
         runs (the streaming path's checkpoint-keyed guard is the
         equivalent there).
         """
-        from chameleon_entity_linking_spark.operators.incremental_er import (
-            incremental_er_update,
-        )
-
         for table in ("doc_norm", "blocking_keys", "clusters"):
             if not self.catalog.exists(table):
                 raise RuntimeError(
@@ -352,7 +359,7 @@ class Pipeline:
         )
         new_norm = normalize(new_docs).persist()
         new_keys = blocking_keys(new_norm, self.block_cfg).persist()
-        # plus the expansion-internal caches (see incremental_er_update's
+        # plus the expansion-internal caches (see incremental_edges'
         # persisted_out); freed whether or not the commits succeed
         persisted: list = [new_norm, new_keys]
         inc_fp = _fp(
@@ -366,11 +373,10 @@ class Pipeline:
         if batch_id is not None:
             lineage["batch_id"] = batch_id
         try:
-            new_edges, merged = incremental_er_update(
+            new_edges = incremental_edges(
                 new_docs,
                 committed_norm,
                 committed_keys,
-                committed_assign,
                 self.block_cfg,
                 self.score_cfg,
                 new_norm=new_norm,
@@ -388,6 +394,17 @@ class Pipeline:
             )
             edge_snap = self.catalog.write(
                 "edges", new_edges, mode="append", lineage=lineage
+            )
+            # the merge reads the committed edge rows, not the edge
+            # plan: the delta's block + score plan ran once, above
+            merged = merge_clusters(
+                committed_assign,
+                self.catalog.read_written(
+                    self.spark, "edges", edge_snap.snapshot_id
+                ),
+                committed_assign.select("doc_id").unionByName(
+                    new_docs.select("doc_id")
+                ),
             )
             cluster_snap = self.catalog.write(
                 "clusters", merged, lineage=lineage

@@ -22,6 +22,7 @@ optimizer cannot infer:
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import tempfile
@@ -174,18 +175,47 @@ SCRATCH_DIR_CONF = "spark.chameleon.cc.spillDir"
 _LOCAL_SCRATCH: list[str] = []
 
 
+def _pid_running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)  # signal 0: an existence probe, nothing is sent
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # alive, owned by another user
+    return True
+
+
+def _sweep_stale_scratch(root: str) -> list[str]:
+    """Remove the ``cel_scratch_<pid>_*`` dirs under ``root`` whose
+    owner pid no longer runs, and return them. ``atexit`` never runs
+    in a killed process (a driver timeout, an OOM kill), so without
+    this sweep each such process leaks its whole scratch warehouse."""
+    removed = []
+    for path in glob.glob(os.path.join(root, "cel_scratch_*_*")):
+        pid = os.path.basename(path).split("_")[2]
+        if pid.isdigit() and not _pid_running(int(pid)):
+            shutil.rmtree(path, ignore_errors=True)
+            removed.append(path)
+    return removed
+
+
 def scratch_dir(spark: SparkSession) -> str | None:
     """Where this session's scratch data lives: data that lazily-read
     DataFrames still point at, so it must outlive any one query.
 
     Under a local master (executors share the driver's filesystem) it
-    is one temp dir per process, removed at interpreter exit — nothing
-    external can delete a file a DataFrame still reads mid-session. On
-    any other master it is the ``spark.chameleon.cc.spillDir`` URI
-    (hdfs://, s3a://, ...), or None when that conf is unset."""
+    is one temp dir per process, ``cel_scratch_<pid>_*``, removed at
+    interpreter exit — nothing external can delete a file a DataFrame
+    still reads mid-session. The first call in a process also sweeps
+    the dirs of processes that died without running their exit hook
+    (``_sweep_stale_scratch``). On any other master it is the
+    ``spark.chameleon.cc.spillDir`` URI (hdfs://, s3a://, ...), or
+    None when that conf is unset."""
     if spark.conf.get("spark.master", "").startswith("local"):
         if not _LOCAL_SCRATCH:
-            d = tempfile.mkdtemp(prefix="cel_scratch_")
+            root = tempfile.gettempdir()
+            _sweep_stale_scratch(root)
+            d = tempfile.mkdtemp(prefix=f"cel_scratch_{os.getpid()}_", dir=root)
             _LOCAL_SCRATCH.append(d)
             atexit.register(shutil.rmtree, d, ignore_errors=True)
         return _LOCAL_SCRATCH[0]

@@ -405,21 +405,33 @@ class ParquetCatalog:
         ]
         return spark.read.parquet(*paths)
 
-    def read_snapshot(
-        self, spark: SparkSession, table: str, snapshot_id: int
-    ) -> DataFrame:
-        """Time travel: read a specific committed snapshot."""
+    def _snapshot_dirs(self, table: str, snapshot_id: int) -> list[str]:
         m = self._read_manifest(table)
         if m is None:
             raise FileNotFoundError(f"table not committed: {table}")
         for snap in m["snapshots"]:
             if snap["snapshot_id"] == snapshot_id:
-                paths = [
+                return [
                     os.path.join(self._table_dir(table), d)
                     for d in snap["data_dirs"]
                 ]
-                return spark.read.parquet(*paths)
         raise KeyError(f"{table}: no snapshot {snapshot_id}")
+
+    def read_snapshot(
+        self, spark: SparkSession, table: str, snapshot_id: int
+    ) -> DataFrame:
+        """Time travel: read a specific committed snapshot."""
+        return spark.read.parquet(*self._snapshot_dirs(table, snapshot_id))
+
+    def read_written(
+        self, spark: SparkSession, table: str, snapshot_id: int
+    ) -> DataFrame:
+        """Read only the rows snapshot ``snapshot_id``'s own commit
+        wrote: the delta of an append (``read_snapshot`` reads the
+        cumulative table), the whole table of an overwrite. That is
+        the snapshot's last data dir, on a local or ``scheme://``
+        warehouse alike."""
+        return spark.read.parquet(self._snapshot_dirs(table, snapshot_id)[-1])
 
     def drop(self, table: str) -> None:
         self.fs.delete(self._table_dir(table))

@@ -74,6 +74,11 @@ class TestRemoteWarehouse:
             100,
             101,
         ]
+        # read_written: only the rows one commit wrote — the append's
+        # delta, not the cumulative table it fronts
+        delta = cat.read_written(spark, "t2", 1)
+        assert sorted(r.id for r in delta.collect()) == [3, 4, 5, 6, 7]
+        assert cat.read_written(spark, "t2", 2).count() == 2
 
     def test_resume_fingerprint_survives_remote_manifest(
         self, spark, viewfs_warehouse

@@ -585,6 +585,7 @@ class TestBatchReplayGuard:
         cat.write("t", spark.range(10))
         cat.write("t", spark.range(4), mode="append")
         assert cat.read(spark, "t").count() == 14
+        assert cat.read_written(spark, "t", 1).count() == 4  # the delta
         snap = cat.rollback("t", 0)
         assert snap.snapshot_id == 0
         assert cat.read(spark, "t").count() == 10
@@ -629,3 +630,105 @@ class TestPipelineDocumentsInput:
         out = p.run(documents=_docs(spark, BATCH1))
         assert "metrics" not in out
         assert out["n_docs"] == len(BATCH1)
+
+
+class TestIncrementalCommitOrder:
+    """Pipeline.incremental commits the delta's edges before the
+    cluster merge: the merge reads the committed rows, so the delta's
+    block + score plan runs once, and a merge failure leaves four
+    appends committed and ``clusters`` untouched."""
+
+    APPENDS = ("documents", "doc_norm", "blocking_keys", "edges")
+
+    @staticmethod
+    def _committed(spark, wh):
+        from chameleon_entity_linking_spark.plans.pipeline import Pipeline
+
+        p = Pipeline(spark, wh, block_cfg=BLOCK_CFG, score_cfg=SCORE_CFG)
+        p.run(evaluate=False, documents=_docs(spark, BATCH1))
+        return p
+
+    @staticmethod
+    def _clusters(spark, p):
+        return {
+            r["doc_id"]: r["cluster_id"]
+            for r in p.catalog.read(spark, "clusters").collect()
+        }
+
+    def test_merge_reads_committed_edges_only(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from chameleon_entity_linking_spark.plans import pipeline as pl
+
+        p = self._committed(spark, str(tmp_path / "wh"))
+        seen = []
+        real = pl.merge_clusters
+
+        def spy(assignments, new_edges, all_docs):
+            seen.append(new_edges)
+            return real(assignments, new_edges, all_docs)
+
+        monkeypatch.setattr(pl, "merge_clusters", spy)
+        res = p.incremental(_docs(spark, BATCH2))
+        assert res["n_new_edges"] > 0
+        (new_edges,) = seen
+        snap = p.catalog.current_snapshot("edges")
+        qe = new_edges._jdf.queryExecution()
+        leaves = qe.optimizedPlan().collectLeaves()
+        assert leaves.size() > 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            assert leaf.getClass().getSimpleName() == "LogicalRelation"
+            assert leaf.relation().fileFormat().toString() == "Parquet"
+            roots = leaf.relation().location().rootPaths()
+            assert [roots.apply(j).toString() for j in range(roots.size())] == [
+                "file:" + str(tmp_path / "wh" / "edges" / f"snap-{snap.snapshot_id}")
+            ]
+        for plan in (qe.optimizedPlan(), qe.executedPlan()):
+            assert "ArrowEvalPython" not in plan.toString()
+
+    def test_merge_failure_leaves_four_appends(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from chameleon_entity_linking_spark.plans import pipeline as pl
+
+        p = self._committed(spark, str(tmp_path / "wh"))
+        pre = {
+            t: p.catalog.current_snapshot(t).snapshot_id
+            for t in self.APPENDS + ("clusters",)
+        }
+        real = pl.merge_clusters
+        calls = []
+
+        def fail_once(*args):
+            calls.append(1)
+            if len(calls) == 1:
+                raise OSError("injected merge failure")
+            return real(*args)
+
+        monkeypatch.setattr(pl, "merge_clusters", fail_once)
+        spark.catalog.clearCache()
+        with pytest.raises(OSError, match="injected"):
+            p.incremental(_docs(spark, BATCH2), batch_id="b1")
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert p.catalog.current_snapshot("clusters").snapshot_id == pre["clusters"]
+        with pytest.raises(RuntimeError, match="PARTIALLY committed") as err:
+            p.incremental(_docs(spark, BATCH2), batch_id="b1")
+        assert f"tables {sorted(self.APPENDS)}" in str(err.value)
+        for t in self.APPENDS:
+            p.catalog.rollback(t, pre[t])
+        p.incremental(_docs(spark, BATCH2), batch_id="b1")
+
+        clean = self._committed(spark, str(tmp_path / "clean"))
+        clean.incremental(_docs(spark, BATCH2), batch_id="b1")
+        assert self._clusters(spark, p) == self._clusters(spark, clean)
+
+    def test_delta_without_edges(self, spark, tmp_path):
+        p = self._committed(spark, str(tmp_path / "wh"))
+        before = self._clusters(spark, p)
+        res = p.incremental(
+            _docs(spark, [("d1", "nothing like anything else", "")])
+        )
+        assert res["n_new_edges"] == 0
+        after = self._clusters(spark, p)
+        assert after == {**before, "d1": "d1"}

@@ -1,6 +1,8 @@
 """Session defaults: the driver heap is sized from the host, and
 session scratch data has one home."""
 
+import os
+
 import pytest
 
 from chameleon_entity_linking_spark.plans.session import (
@@ -84,3 +86,22 @@ def test_er_query_without_scratch_dir_names_the_conf():
     stub = _StubSpark({"spark.master": "yarn"})
     with pytest.raises(ValueError, match=SCRATCH_DIR_CONF.replace(".", r"\.")):
         entry._resolve(stub, None, None, None)
+
+
+def test_stale_scratch_dirs_of_dead_pids_are_swept(tmp_path):
+    import subprocess
+    import sys
+
+    from chameleon_entity_linking_spark.plans.session import _sweep_stale_scratch
+
+    # a reaped child's pid no longer runs
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    dead = tmp_path / f"cel_scratch_{child.pid}_x1"
+    live = tmp_path / f"cel_scratch_{os.getpid()}_x2"
+    other = tmp_path / "cel_scratch_nopid"
+    for d in (dead, live, other):
+        (d / "wh").mkdir(parents=True)
+    assert _sweep_stale_scratch(str(tmp_path)) == [str(dead)]
+    assert not dead.exists()
+    assert live.exists() and other.exists()
