@@ -11,7 +11,7 @@ Iceberg-style tables of interleaved text+media documents:
   block      -> salted multi-key blocking (token / MinHash-LSH /
                 media_ref exact keys), explicit repartitioning,
                 skew-key splitting, pair canonicalization
-  score      -> batched pandas-UDF pairwise scoring: Jaro-Winkler +
+  score      -> pairwise scoring: Arrow-batched Jaro-Winkler, Spark's
                 Levenshtein + embedding cosine, weighted mix
                 (the reference's 0.9/0.1 mix, BiEncoder/test.py:120)
   cluster    -> iterative large-star/small-star connected components

@@ -1,4 +1,3 @@
 from chameleon_entity_linking_spark.functions.strsim import (  # noqa: F401
     jaro_winkler_batch,
-    levenshtein_batch,
 )

@@ -1,12 +1,14 @@
-"""Vectorized string-similarity kernels (numpy, no external libs).
+"""String-similarity kernels (numpy, no external libs).
 
 These are the engine's analogue of the reference's pairwise rerank
 scorers (cross-encoder predict, `CrossEncoder/test.py:98-100`; cosine
-mix, `BiEncoder/test.py:115-120`): batched, never per-row-interpreted.
-They run inside Arrow-batched pandas UDFs — one call scores a whole
-Arrow batch of pairs.
+mix, `BiEncoder/test.py:115-120`). ``jaro_winkler_batch`` is the one
+Python string kernel the engine runs: it sits inside an Arrow-batched
+pandas UDF, so one call scores a whole Arrow batch of pairs.
+Levenshtein runs in the JVM (Spark's built-in ``levenshtein``); the
+scalar ``levenshtein`` here is its test reference, DuckDB-checked.
 
-Levenshtein uses a two-row DP where each row update is fully
+The scalar Levenshtein uses a two-row DP where each row update is
 vectorized; the insert-cost prefix recurrence
 ``new[j] = min(t[j], new[j-1]+1)`` is solved in closed form with
 ``np.minimum.accumulate(t - arange) + arange`` (a standard
@@ -116,63 +118,6 @@ def _batch_matrix(strs: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
     return mat, lens
 
 
-def levenshtein_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
-    """Edit distance for each aligned pair — the whole batch at once.
-
-    2-D dynamic program: one loop over positions of ``a`` (bounded by
-    the batch's longest string), each step fully vectorized across the
-    batch AND across ``b``'s positions (the insert-cost recurrence is
-    the same prefix-min closed form as the scalar kernel). Rows are
-    sorted by len(a) descending so the active slice shrinks as short
-    strings finish — total work ~ sum(len(a_i)) * max(len(b)), not
-    N * max(len(a)) * max(len(b)). Bit-identical to the scalar
-    ``levenshtein`` (property-tested), which itself matches DuckDB.
-    """
-    n = len(a)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    order = np.argsort(
-        [-(len(x) if x else 0) for x in a], kind="stable"
-    )
-    ca, la = _batch_matrix([a[i] or "" for i in order])
-    cb, lb = _batch_matrix([b[i] or "" for i in order])
-    wb = cb.shape[1]
-    arange = np.arange(1, wb + 1, dtype=np.int64)
-    prev = np.broadcast_to(
-        np.arange(wb + 1, dtype=np.int64), (n, wb + 1)
-    ).copy()
-    la_desc = la  # sorted descending by construction
-    for i in range(int(la_desc[0]) if n else 0):
-        # rows still holding a char at index i: la >= i+1
-        k = int(np.searchsorted(-la_desc, -(i + 1), side="right"))
-        if k == 0:
-            break
-        ch = ca[:k, i : i + 1]
-        t = np.minimum(
-            prev[:k, :-1] + (cb[:k] != ch), prev[:k, 1:] + 1
-        )
-        head = i + 1
-        np.minimum(t, head + arange, out=t)
-        m = np.minimum.accumulate(t - arange, axis=1) + arange
-        prev[:k, 0] = head
-        prev[:k, 1:] = m
-    out_sorted = prev[np.arange(n), lb]
-    out = np.empty(n, dtype=np.int64)
-    out[order] = out_sorted
-    return out
-
-
-def levenshtein_ratio_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
-    """1 - dist/max(len) similarity in [0,1]; 1.0 for two empties."""
-    d = levenshtein_batch(a, b).astype(np.float64)
-    mx = np.fromiter(
-        (max(len(x or ""), len(y or "")) or 1 for x, y in zip(a, b)),
-        dtype=np.float64,
-        count=len(a),
-    )
-    return 1.0 - d / mx
-
-
 def jaro_winkler_batch(
     a: Sequence[str], b: Sequence[str], p: float = 0.1,
     boost_threshold: float = 0.7,
@@ -185,8 +130,8 @@ def jaro_winkler_batch(
     the k-th matched char of a is scatter-aligned against the k-th
     matched char of b via cumsum ranks, then mismatches are counted
     with integer-halving — identical to the scalar kernel (and to
-    DuckDB's rapidfuzz semantics). Rows sorted by len(a) descending
-    shrink the active slice as in ``levenshtein_batch``.
+    DuckDB's rapidfuzz semantics). Rows are sorted by len(a)
+    descending so the active slice shrinks as short strings finish.
     """
     n = len(a)
     if n == 0:

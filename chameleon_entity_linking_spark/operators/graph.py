@@ -392,20 +392,3 @@ def personalized_pagerank(
             new_ranks.unionByName(reached)
         )
     return ranks
-
-
-def top_k_expansion(
-    edges: DataFrame, seeds: DataFrame, k: int, **ppr_kwargs
-) -> DataFrame:
-    """Top-k expansion candidates by PPR, excluding the seeds
-    (the W4 analogue: `utils/entity_expander.py:125`).
-
-    Global top-k via orderBy().limit(k): compiles to a distributed
-    TakeOrderedAndProject (per-partition heaps + driver merge of k
-    rows) — never a single-partition window Exchange.
-    """
-    ranks = personalized_pagerank(edges, seeds, **ppr_kwargs)
-    cand = ranks.join(seeds.select("node"), "node", "left_anti")
-    return cand.orderBy(F.desc("rank"), F.asc("node")).limit(k).select(
-        "node", "rank"
-    )

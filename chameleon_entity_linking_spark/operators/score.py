@@ -28,8 +28,10 @@ three-phase cascade, each phase shuffling less data than it rules out:
    ``upper = w_text*(w_jw + w_lev + w_tok*s_tok + w_cos*s_cos)
    [+ w_media*s_media]`` — a pair with ``upper < threshold`` cannot
    clear the final threshold whatever JW/Levenshtein say.
-3. **Arrow rerank (Python, final survivors).** Batched
-   JW/Levenshtein on name spans, weighted mix, threshold.
+3. **Rerank (final survivors).** Arrow-batched Jaro-Winkler on name
+   spans (the one Python string kernel), a JW-refined bound, then
+   Spark's built-in ``levenshtein`` ratio in the JVM, weighted mix,
+   threshold.
 
 Same retrieve-then-rerank shape as the reference
 (`BiEncoder/test_retrieval.py` recall stage -> `BiEncoder/test.py`
@@ -42,10 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chameleon_entity_linking_spark.functions.strsim import (
-    jaro_winkler_batch,
-    levenshtein_ratio_batch,
-)
+from chameleon_entity_linking_spark.functions.strsim import jaro_winkler_batch
 
 
 # cap on name-span chars entering the O(n^2) string kernels — bounds
@@ -119,17 +118,13 @@ class ScoreConfig:
         return dict(vars(self))
 
 
-def _make_udfs():
+def _make_jw_udf():
     # built lazily: pandas_udf parses its DDL against the active session
     @F.pandas_udf("double")
     def jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(jaro_winkler_batch(a.tolist(), b.tolist()))
 
-    @F.pandas_udf("double")
-    def lev_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(levenshtein_ratio_batch(a.tolist(), b.tolist()))
-
-    return jw_udf, lev_ratio_udf
+    return jw_udf
 
 
 def _features(doc_norm: DataFrame, side: str) -> DataFrame:
@@ -331,7 +326,7 @@ def score_pairs(
     ``cfg.sketch_fused``) have been through :func:`sketch_prefilter`;
     any other pair list goes through it here.
     """
-    jw_udf, lev_ratio_udf = _make_udfs()
+    jw_udf = _make_jw_udf()
     if "s_cos" not in pairs.columns:
         pairs = sketch_prefilter(pairs, doc_norm, cfg)
     # the prefilter already computed the int8-dot cosine — reuse it
@@ -411,14 +406,14 @@ def score_pairs(
     cheap = cheap.join(_name_features(doc_norm, "a"), "doc_a").join(
         _name_features(doc_norm, "b"), "doc_b"
     )
-    # ---- expensive Python components on survivors only -----------------
+    # ---- expensive string components on survivors only -----------------
     # names were truncated JVM-side above, bounding the quadratic
     # kernels AND the Arrow transfer; explicit repartition because AQE
     # coalesces by bytes while pandas-UDF cost is per-row CPU
     spark = pairs.sparkSession
     # W5 length-sorted batching (`BiEncoder/model.py:99-100`): each
     # Arrow batch pads to its own (short) max length — the batched 2-D
-    # kernels' work scales with batch max length. No shuffle.
+    # JW kernel's work scales with batch max length. No shuffle.
     survivors = (
         cheap.repartition(spark.sparkContext.defaultParallelism)
         .sortWithinPartitions(F.length("name_a"))
@@ -450,7 +445,14 @@ def score_pairs(
             .otherwise(jw_text_max)
         )
         survivors = survivors.where(jw_upper >= cfg.threshold)
-    survivors = survivors.withColumn("s_lev", lev_ratio_udf("name_a", "name_b"))
+    # Spark's levenshtein counts code points like length(), so this is
+    # the ratio 1 - d/max(len) (1.0 for two empty names); _eval_once
+    # keeps Catalyst from inlining the DP into text_score, score and
+    # the edges filter
+    s_lev = 1 - F.levenshtein("name_a", "name_b") / F.greatest(
+        F.length("name_a"), F.length("name_b"), F.lit(1)
+    )
+    survivors = survivors.withColumn("s_lev", _eval_once(s_lev))
     text_score = (
         cfg.w_jw * F.col("s_jw")
         + cfg.w_lev * F.col("s_lev")

@@ -1364,22 +1364,18 @@ FROM (
 
 def q_pair_string_scores(spark: SparkSession, sf: str) -> DataFrame:
     """B2 pairwise rerank scoring through the engine's *real* kernels:
-    trigram-blocked pairs scored with the same Arrow-batched
-    Jaro-Winkler/Levenshtein UDFs the ER pipeline uses, mixed
-    0.9/0.1-style — oracled against DuckDB's built-in string
-    functions (independent implementations, exact match)."""
+    trigram-blocked pairs scored with the Arrow-batched Jaro-Winkler
+    UDF and Spark's built-in ``levenshtein``, the two string kernels
+    the ER pipeline uses, mixed 0.9/0.1-style — oracled against
+    DuckDB's built-in string functions (independent implementations,
+    exact match)."""
     from chameleon_entity_linking_spark.functions.strsim import (
         jaro_winkler_batch,
-        levenshtein_batch,
     )
 
     @F.pandas_udf("double")
     def jw(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(jaro_winkler_batch(a.tolist(), b.tolist()))
-
-    @F.pandas_udf("long")
-    def lev(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(levenshtein_batch(a.tolist(), b.tolist()))
 
     docs = load(spark, sf, "documents")
     pairs = q_trigram_blocking_pairs(spark, sf).where(
@@ -1400,7 +1396,7 @@ def q_pair_string_scores(spark: SparkSession, sf: str) -> DataFrame:
         "doc_a",
         "doc_b",
         jw("head_a", "head_b").alias("s_jw"),
-        lev("head_a", "head_b").alias("lev_dist"),
+        F.levenshtein("head_a", "head_b").cast("long").alias("lev_dist"),
     )
     return out.withColumn(
         "mixed",

@@ -156,27 +156,6 @@ def read_jsonl_negatives(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(NEGATIVES_SCHEMA).json(path)
 
 
-def negatives_capped(
-    negs: DataFrame, per_system: int = 4
-) -> DataFrame:
-    """P6: explode the neg map and keep <= ``per_system`` negatives per
-    (qid, system), set-deduped — the distributed form of
-    `BiEncoder/train.py:110-122`."""
-    from pyspark.sql import Window
-
-    exploded = (
-        negs.select("qid", F.explode("neg").alias("system", "pids"))
-        .select("qid", "system", F.explode("pids").alias("pid"))
-        .dropDuplicates(["qid", "system", "pid"])
-    )
-    w = Window.partitionBy("qid", "system").orderBy("pid")
-    return (
-        exploded.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= per_system)
-        .drop("rn")
-    )
-
-
 def read_pickle_scores(spark: SparkSession, path: str) -> DataFrame:
     """S5: gzip-pickle `{(qid, pid): score}` -> (qid, pid, score).
 

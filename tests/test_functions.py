@@ -1,10 +1,12 @@
-"""Unit tests for the vectorized kernels (SURVEY.md §5.1)."""
+"""Unit tests for the vectorized kernels (SURVEY.md §5.1), and the
+parity of Spark's built-in ``levenshtein`` with the scalar reference."""
 
 import hashlib
 
 import duckdb
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from chameleon_entity_linking_spark.functions.embed import encode_hashed_batch
 from chameleon_entity_linking_spark.functions.minhash import (
@@ -17,9 +19,24 @@ from chameleon_entity_linking_spark.functions.strsim import (
     jaro_winkler,
     jaro_winkler_batch,
     levenshtein,
-    levenshtein_batch,
-    levenshtein_ratio_batch,
 )
+
+
+def _cases():
+    """Adversarial edges plus seeded random mixed-length pairs over an
+    alphabet with accented and CJK characters."""
+    rng = np.random.RandomState(3)
+    letters = np.array(list("abcdef é中 .-"))
+    cases = [
+        ("", ""), ("", "abc"), ("abc", ""), ("a", "a"),
+        ("martha", "marhta"), ("dixon", "dicksonx"),
+        ("ab", "ba"), ("aaaa", "aaaa"), ("éclair", "eclair"),
+    ]
+    for _ in range(400):
+        a = "".join(rng.choice(letters, rng.randint(0, 60)))
+        b = "".join(rng.choice(letters, rng.randint(0, 60)))
+        cases.append((a, b))
+    return cases
 
 
 class TestLevenshtein:
@@ -39,14 +56,6 @@ class TestLevenshtein:
     def test_known_values(self, a, b, d):
         assert levenshtein(a, b) == d
 
-    def test_batch(self):
-        out = levenshtein_batch(["kitten", "x"], ["sitting", "x"])
-        assert out.tolist() == [3, 0]
-
-    def test_ratio(self):
-        out = levenshtein_ratio_batch(["abcd", "", "ab"], ["abcd", "", "cd"])
-        assert out.tolist() == [1.0, 1.0, 0.0]
-
     def test_duckdb_parity_random(self):
         rng = np.random.RandomState(1)
         letters = np.array(list("abcdef "))
@@ -57,6 +66,35 @@ class TestLevenshtein:
             assert levenshtein(a, b) == con.execute(
                 "select levenshtein(?, ?)", [a, b]
             ).fetchone()[0]
+
+    def test_spark_levenshtein_equals_scalar(self, spark):
+        """Spark's built-in ``levenshtein`` (what scoring and the
+        pair_string_scores query run) equals the scalar reference, and
+        ``1 - d / greatest(length, length, 1)`` equals the reference
+        ratio bit for bit: code points, not UTF-16 units or bytes, on
+        empty, accented, CJK and astral-plane strings. One job."""
+        rng = np.random.RandomState(11)
+        alphabet = np.array(list("ab é中ñ") + ["\U0001F600", "\U00010348"])
+        cases = _cases() + [
+            ("", "\U0001F600"), ("\U0001F600\U00010348", "\U00010348"),
+            ("naïve", "naive"), ("東京都", "京都"),
+        ]
+        for _ in range(600):
+            a = "".join(rng.choice(alphabet, rng.randint(0, 41)))
+            b = "".join(rng.choice(alphabet, rng.randint(0, 41)))
+            cases.append((a, b))
+        df = spark.createDataFrame(
+            [(i, a, b) for i, (a, b) in enumerate(cases)],
+            "i int, a string, b string",
+        )
+        d = F.levenshtein("a", "b")
+        ratio = 1 - d / F.greatest(F.length("a"), F.length("b"), F.lit(1))
+        rows = df.select("i", d.alias("d"), ratio.alias("ratio")).collect()
+        got = {r.i: (r.d, r.ratio) for r in rows}
+        assert len(got) == len(cases)
+        for i, (a, b) in enumerate(cases):
+            want = levenshtein(a, b)
+            assert got[i] == (want, 1 - want / max(len(a), len(b), 1)), (a, b)
 
 
 class TestJaroWinkler:
@@ -94,32 +132,12 @@ class TestJaroWinkler:
 
 
 class TestBatchKernelsMatchScalar:
-    """The 2-D vectorized batch kernels must be BIT-identical to the
-    scalar references (which are themselves DuckDB-parity-tested):
-    random mixed-length pairs + adversarial edges in one batch."""
-
-    def _cases(self):
-        rng = np.random.RandomState(3)
-        letters = np.array(list("abcdef é中 .-"))
-        cases = [
-            ("", ""), ("", "abc"), ("abc", ""), ("a", "a"),
-            ("martha", "marhta"), ("dixon", "dicksonx"),
-            ("ab", "ba"), ("aaaa", "aaaa"), ("éclair", "eclair"),
-        ]
-        for _ in range(400):
-            a = "".join(rng.choice(letters, rng.randint(0, 60)))
-            b = "".join(rng.choice(letters, rng.randint(0, 60)))
-            cases.append((a, b))
-        return cases
-
-    def test_levenshtein_batch_equals_scalar(self):
-        cases = self._cases()
-        out = levenshtein_batch([a for a, _ in cases], [b for _, b in cases])
-        for i, (a, b) in enumerate(cases):
-            assert out[i] == levenshtein(a, b), (a, b)
+    """The 2-D vectorized batch kernel must be BIT-identical to the
+    scalar reference (which is itself DuckDB-parity-tested): random
+    mixed-length pairs + adversarial edges in one batch."""
 
     def test_jaro_winkler_batch_equals_scalar(self):
-        cases = self._cases()
+        cases = _cases()
         out = jaro_winkler_batch([a for a, _ in cases], [b for _, b in cases])
         for i, (a, b) in enumerate(cases):
             assert out[i] == jaro_winkler(a, b), (a, b)

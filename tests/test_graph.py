@@ -1,7 +1,7 @@
 """Graph expansion: k-hop BFS vs hand-computed hops, PPR vs a numpy
 power-iteration oracle, count-bounded DFS vs an independent Python
 walk, DOT rendering vs exact expected text (SURVEY.md §2.8
-G1/G2/G3/G5/W4)."""
+G1/G2/G3/G5)."""
 
 import random
 
@@ -15,9 +15,7 @@ from chameleon_entity_linking_spark.operators.graph import (
     k_hop_ball,
     k_hop_expand,
     personalized_pagerank,
-    top_k_expansion,
 )
-from chameleon_entity_linking_spark.sources.trec import to_trec
 
 #  graph: a-b-c-d chain, e-f edge, g isolated-ish via c
 EDGES = [("a", "b"), ("b", "c"), ("c", "d"), ("e", "f"), ("c", "g")]
@@ -94,22 +92,6 @@ class TestPPR:
         assert set(got) == {k for k, v in want.items() if v > 0}
         for node, rank in got.items():
             assert rank == pytest.approx(want[node], rel=1e-9), node
-
-    def test_top_k_excludes_seeds(self, spark):
-        top = top_k_expansion(
-            _edges(spark), _seeds(spark, ["a"]), 2, iterations=5
-        ).collect()
-        names = [r.node for r in top]
-        assert "a" not in names and len(names) == 2
-        assert names[0] == "b"  # nearest neighbor ranks highest
-
-    def test_top_k_plan_is_distributed(self, spark):
-        # global top-k must compile to TakeOrderedAndProject (per-
-        # partition heaps), never a single-partition window Exchange
-        df = top_k_expansion(_edges(spark), _seeds(spark, ["a"]), 2, iterations=2)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        assert "SinglePartition" not in plan
 
 
 class TestKHopBall:
@@ -240,15 +222,6 @@ class TestExpansionDot:
         )
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
-
-
-class TestTrecSink:
-    def test_line_format(self, spark):
-        df = spark.createDataFrame(
-            [(1, 10, 1, 0.9), (1, 11, 2, 0.5)], "qid int, pid int, rank int, score double"
-        )
-        lines = [r.line for r in to_trec(df).collect()]
-        assert lines == ["1 Q0 10 1 0.9 cel_spark", "1 Q0 11 2 0.5 cel_spark"]
 
 
 class TestDfsExpandIntIds:

@@ -10,7 +10,6 @@ import pickle
 from pyspark.sql import functions as F
 
 from chameleon_entity_linking_spark.sources.ingest import (
-    negatives_capped,
     read_entity_annotations,
     read_jsonl_negatives,
     read_pickle_scores,
@@ -138,20 +137,6 @@ class TestJsonlNegatives:
         rows = {r.qid: r for r in df.collect()}
         assert rows[1].pos == [10] and rows[2].pos == [11, 12]
         assert sorted(rows[1].neg.keys()) == ["bm25", "dense"]
-
-    def test_per_system_cap_and_dedup(self, spark, tmp_path):
-        p = str(tmp_path / "negs.jsonl")
-        self._write(p)
-        capped = negatives_capped(read_jsonl_negatives(spark, p), per_system=4)
-        by_sys = {
-            (r.qid, r.system): r.n
-            for r in capped.groupBy("qid", "system")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        # 6 raw bm25 negs for qid 1 -> 5 distinct -> capped at 4
-        assert by_sys[(1, "bm25")] == 4
-        assert by_sys[(1, "dense")] == 1
 
 
 class TestPickleScores:

@@ -3,8 +3,10 @@
 import pytest
 from pyspark.sql import functions as F
 
+from chameleon_entity_linking_spark.functions.strsim import levenshtein
 from chameleon_entity_linking_spark.operators.normalize import normalize
 from chameleon_entity_linking_spark.operators.score import (
+    MAX_NAME_CHARS,
     ScoreConfig,
     edges_above_threshold,
     score_pairs,
@@ -208,6 +210,53 @@ class TestScorePairs:
         # the committed doc_norm parquet). Re-inlining the dot into
         # every consumer would put it at ~8+.
         assert plan.count("zip_with") <= 3, plan
+        # s_lev feeds text_score, score and the edges filter; without
+        # its _eval_once guard Catalyst inlines the DP into each of them
+        cfg = ScoreConfig()
+        edges_plan = (
+            edges_above_threshold(score_pairs(pairs, norm, cfg), cfg)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        assert edges_plan.count("levenshtein(") == 1, edges_plan
+
+    def test_s_lev_is_levenshtein_ratio_of_truncated_names(self, spark):
+        """s_lev is ``1 - levenshtein(a, b) / max(len, 1)`` of the names
+        cut to MAX_NAME_CHARS, bit for bit: two media-only docs (both
+        names empty -> 1.0), names longer than the cap (compared after
+        truncation) and an ordinary typo."""
+        long_a = "x" * (MAX_NAME_CHARS - 5) + "abcde" + " tail of the first name"
+        long_b = "x" * (MAX_NAME_CHARS - 5) + "abXde" + " and another tail"
+        norm = _norm(
+            spark,
+            [
+                ("m1", "", ["mX"]),
+                ("m2", "", ["mX"]),
+                ("l1", long_a, []),
+                ("l2", long_b, []),
+                ("t1", "acme corp builds rockets", []),
+                ("t2", "acme korp builds rockets", []),
+            ],
+        )
+        pairs = spark.createDataFrame(
+            [("m1", "m2"), ("l1", "l2"), ("t1", "t2")],
+            "doc_a string, doc_b string",
+        )
+        got = {
+            r.doc_a: r.s_lev
+            for r in score_pairs(pairs, norm, ScoreConfig(cascade=False)).collect()
+        }
+
+        def ratio(a, b):
+            a, b = a[:MAX_NAME_CHARS], b[:MAX_NAME_CHARS]
+            return 1 - levenshtein(a, b) / max(len(a), len(b), 1)
+
+        assert got["m1"] == 1.0
+        assert got["l1"] == ratio(long_a, long_b) == 1 - 1 / MAX_NAME_CHARS
+        assert got["t1"] == ratio(
+            "acme corp builds rockets", "acme korp builds rockets"
+        )
 
 
 def _dot_q(a, b):

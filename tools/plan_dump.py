@@ -9,10 +9,13 @@ seed=7)``) and writes, one file each, the formatted physical plans of
 - ``score_pairs`` over the fused candidate pairs,
 
 plus the sorted pair sets of both ``candidate_pairs`` modes (fused and
-``prefilter_min_cheap=None``). Expression ids (``#123``), exchange plan
+``prefilter_min_cheap=None``) and the sorted scored rows of
+``score_pairs`` over the fused pairs (``doc_a``, ``doc_b``, every
+``s_*`` column and ``score``, each written with ``repr`` so equal
+files mean bit-identical scores). Expression ids (``#123``), exchange plan
 ids (``plan_id=45``) and the per-plan random seeds of the
 ``_eval_once`` shuffle guards are masked, so two checkouts produce the
-same files iff their plans and pair sets are the same:
+same files iff their plans, pair sets and scores are the same:
 
     python tools/plan_dump.py OUT_A                       # in checkout A
     (cd ../other && python tools/plan_dump.py OUT_B)      # in checkout B
@@ -47,6 +50,14 @@ def masked_plan(df) -> str:
 def _pair_lines(pairs) -> str:
     rows = sorted((r.doc_a, r.doc_b) for r in pairs.select("doc_a", "doc_b").collect())
     return "".join(f"{a}\t{b}\n" for a, b in rows)
+
+
+def _scored_lines(scored) -> str:
+    cols = ["doc_a", "doc_b"] + [c for c in scored.columns if c.startswith("s_")]
+    cols.append("score")
+    rows = sorted(tuple(r) for r in scored.select(*cols).collect())
+    header = "\t".join(cols) + "\n"
+    return header + "".join("\t".join(map(repr, r)) + "\n" for r in rows)
 
 
 def main(out_dir: str) -> None:
@@ -91,12 +102,14 @@ def main(out_dir: str) -> None:
         doc_norm_all=base.unionByName(new),
         score_cfg=score_cfg,
     )
+    scored = score_pairs(fused, doc_norm, score_cfg)
     outputs = {
         "candidate_pairs.plan": masked_plan(fused),
         "incremental_candidate_pairs.plan": masked_plan(inc),
-        "score_pairs.plan": masked_plan(score_pairs(fused, doc_norm, score_cfg)),
+        "score_pairs.plan": masked_plan(scored),
         "candidate_pairs_fused.pairs": _pair_lines(fused),
         "candidate_pairs_unfused.pairs": _pair_lines(unfused),
+        "score_pairs.rows": _scored_lines(scored),
     }
     os.makedirs(out_dir, exist_ok=True)
     for name, text in outputs.items():
